@@ -8,15 +8,10 @@ outside the benchmark's clocks.
 Distributions follow ``tools/gen_sf.py`` (the repo's fixture
 generator): uniform keys, 5-way categorical splits, ~4 lines per order
 drawn as 1..7, prices in cents.
-
-Usage::
-
-    python perfbench/gen.py --seed 7 --out DIR
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 
 import numpy as np
@@ -188,16 +183,3 @@ def keyed_rows(seed: int, stream: int, keys: np.ndarray) -> pa.Table:
         "s": _pick(r, WORDS, n),
     })
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--batches", type=int, default=12)
-    args = ap.parse_args()
-    analyst(args.seed, args.out, args.batches)
-    write(keyed_rows(args.seed, 0, np.arange(10_000)), f"{args.out}/keyed.parquet")
-
-
-if __name__ == "__main__":
-    main()

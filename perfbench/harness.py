@@ -1,5 +1,5 @@
 """Run-time state shared by the workloads: the Spark session and its
-set-ups, timed operations, failure counting and memory measurement."""
+set-up, timed operations, failure counting and memory measurement."""
 
 from __future__ import annotations
 
@@ -19,8 +19,10 @@ from perfbench.spans import Span, Tracer
 SLOTS = max(1, min(3, (os.cpu_count() or 2) - 1))
 SHUFFLE_PARTITIONS = 4
 DRIVER_MEMORY = "2g"
-#: Set-ups per run; ``setup_s`` is their median.
-SETUPS = 3
+#: A fixed heap and young generation: left to G1's sizing heuristics,
+#: which react to pause times and so to the host's load, the JVM's peak
+#: RSS moved by a quarter between runs of the same work.
+DRIVER_JAVA_OPTIONS = f"-Xms{DRIVER_MEMORY} -Xmn512m"
 #: Consecutive failed operations after which a run stops early.
 MAX_FAIL_STREAK = 5
 
@@ -47,7 +49,7 @@ class Bench:
         self.op_kind: dict[int, str] = {}
         #: latency samples by name (seconds), reported on the samples line
         self.samples: dict[str, list[float]] = {}
-        self.setups: list[float] = []
+        self.setup_s = 0.0
         self.build_s = 0.0
 
     @property
@@ -77,6 +79,7 @@ class Bench:
 
         extra = {
             "spark.driver.memory": DRIVER_MEMORY,
+            "spark.driver.extraJavaOptions": DRIVER_JAVA_OPTIONS,
             "spark.local.dir": f"{self.tmp}/local",
             "spark.sql.warehouse.dir": f"{self.tmp}/warehouse",
             "spark.ui.showConsoleProgress": "false",
@@ -89,6 +92,7 @@ class Bench:
                 "spark.eventLog.compress": "false",
                 "spark.eventLog.rolling.enabled": "false",
             })
+            self._watch_change_feed()
         with self.span("session.start"):
             self.spark = get_session(
                 "perfbench", master=f"local[{SLOTS}]",
@@ -97,26 +101,38 @@ class Bench:
         self.lake = Lake(self.spark)
         return self.spark
 
+    def _watch_change_feed(self) -> None:
+        """Wrap ``TxTable.changes`` at class level in a ``txlog.changes``
+        span, so that calls from inside the program are counted too (the
+        view's refresh plans its delta through it). The bypass checks
+        read these spans."""
+        from novlake_spark.txlog import TxTable
+
+        inner, span = TxTable.changes, self.span
+
+        def changes(table, *args, **kwargs):
+            with span("txlog.changes"):
+                return inner(table, *args, **kwargs)
+
+        TxTable.changes = changes
+
     def setup(self, workload) -> None:
-        """``SETUPS`` set-ups, each ``get_session``, the workload's attach
-        and a warm-up. The first launches the JVM and then builds the
-        workload's tables (input generation, left out of its set-up time);
-        the others call ``get_session`` on the running application, which
-        hands back the live session with its confs re-applied. So
-        ``setup_s``, their median, holds the program's own set-up work,
-        and the JVM launch shows as ``session.start_s`` in the traced run."""
-        for i in range(SETUPS):
-            t0 = time.perf_counter()
-            self.start_session()
-            if i == 0:
-                t1 = time.perf_counter()
-                workload.build()
-                self.build_s = time.perf_counter() - t1
-                t0 += self.build_s
-            workload.attach()
-            with self.span("session.warmup"):
-                workload.warmup()
-            self.setups.append(time.perf_counter() - t0)
+        """One cold set-up: ``get_session`` launches the JVM, then the
+        workload attaches its tables and warms up through the program.
+        The tables are built in between, from the generated inputs; that
+        is input generation, so its time is left out of ``setup_s``.
+        Set-ups are not repeated within a run: each one launches a JVM
+        (5–9 s), so the driver's median over runs stands in for a median
+        within one."""
+        t0 = time.perf_counter()
+        self.start_session()
+        t1 = time.perf_counter()
+        workload.build()
+        self.build_s = time.perf_counter() - t1
+        workload.attach()
+        with self.span("session.warmup"):
+            workload.warmup()
+        self.setup_s = time.perf_counter() - t0 - self.build_s
 
     def shutdown(self) -> None:
         """Stop the session and the JVM, and wait until the JVM and its
@@ -140,14 +156,14 @@ class Bench:
     def jvm_pid(self) -> int:
         return int(self.spark._jvm.java.lang.ProcessHandle.current().pid())
 
-    def peak_mem_mb(self) -> float:
-        """Peak RSS of the driver JVM plus the Python driver: the kernel's
-        high-water mark ``VmHWM`` of the JVM plus ``ru_maxrss`` of this
-        process (both per-process peaks, so the sum bounds the joint
-        peak from above)."""
+    def peak_mem_mb(self) -> tuple[float, float]:
+        """Peak RSS in MB of the driver JVM and of the Python driver: the
+        kernel's high-water mark ``VmHWM`` of the JVM and ``ru_maxrss`` of
+        this process. Both are per-process peaks, so their sum bounds the
+        joint peak from above."""
         with open(f"/proc/{self.jvm_pid()}/status") as fh:
             hwm_kb = next(int(line.split()[1]) for line in fh if line.startswith("VmHWM:"))
-        return (hwm_kb + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss) / 1024.0
+        return hwm_kb / 1024.0, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
 
     # -- timed operations -----------------------------------------------------
     @contextlib.contextmanager

@@ -16,7 +16,6 @@ import json
 import os
 import platform
 import shutil
-import statistics
 import subprocess
 import sys
 import time
@@ -76,6 +75,18 @@ def _isolate(tmp: str) -> None:
     os.chdir(tmp)
 
 
+def _steal_share(before: list[int], after: list[int]) -> float:
+    """Share of all CPU time between two ``/proc/stat`` readings that the
+    hypervisor gave to other guests: how loud the host was."""
+    d = [y - x for x, y in zip(before, after)]
+    return d[7] / sum(d) if sum(d) else 0.0
+
+
+def _cpu_times() -> list[int]:
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
 def _layer_metrics(b, wl, names: list[str]) -> dict[str, float]:
     from perfbench import spans
 
@@ -86,14 +97,11 @@ def _layer_metrics(b, wl, names: list[str]) -> dict[str, float]:
         stem = name.removesuffix("_s")
         if name.endswith("_s") and not name.startswith("spark.") and b.span_walls(stem):
             out[name] = b.span_median(stem)
-    starts = b.span_walls("session.start")
-    out["session.start_s"] = starts[0]
-    out["session.restart_s"] = statistics.median(starts[1:])
     out.update(wl.layer())
-    # bypass evidence: spans of layers this workload must not reach
-    names_seen = [s.name for s in b.tracer.spans]
-    out["bypass.txlog_spans"] = sum(n.startswith("txlog.") for n in names_seen)
-    out["bypass.changes_spans"] = sum(n.startswith("txlog.changes") for n in names_seen)
+    # bypass evidence: change-feed plans, the program's own included
+    out["bypass.changes_spans"] = sum(s.name == "txlog.changes" for s in b.tracer.spans)
+    if not wl.CHANGE_FEED and out["bypass.changes_spans"]:
+        b.fail_final(f"{out['bypass.changes_spans']} change-feed plans in a workload that bypasses it")
     # Spark's own figures per operation kind, averaged per operation
     per_op = spans.op_spark_metrics(spans.read_event_logs(f"{b.tmp}/eventlog"), b.ops)
     for kind in set(b.op_kind.values()):
@@ -147,12 +155,14 @@ def main() -> int:
         t0 = time.perf_counter()
         wl.prime()
         phases["prime"] = time.perf_counter() - t0
-        t0 = time.perf_counter()
+        t0, cpu0 = time.perf_counter(), _cpu_times()
         wl.run()
         loop_wall = time.perf_counter() - t0
+        steal = _steal_share(cpu0, _cpu_times())
+        # before the end-of-run checks, whose own frames are not the program's
+        jvm_mb, py_mb = b.peak_mem_mb()
         wl.finish()
         phases["finish"] = time.perf_counter() - t0 - loop_wall
-        peak = b.peak_mem_mb()
         import pyspark
 
         run = {
@@ -160,12 +170,13 @@ def main() -> int:
             "trace": bool(args.trace), "git_sha": _git_sha(), "source_digest": _source_digest(),
             "nproc": os.cpu_count(), "task_slots": harness.SLOTS,
             "shuffle_partitions": harness.SHUFFLE_PARTITIONS,
-            "driver_memory": harness.DRIVER_MEMORY, "spark": pyspark.__version__,
-            "python": platform.python_version(), "setups": b.setups, "clock_s": b.clock,
-            "loop_wall_s": loop_wall, "phases_s": phases, "build_s": b.build_s,
+            "driver_memory": harness.DRIVER_MEMORY,
+            "driver_java_options": harness.DRIVER_JAVA_OPTIONS, "spark": pyspark.__version__,
+            "python": platform.python_version(), "clock_s": b.clock, "jvm_mb": jvm_mb, "py_mb": py_mb,
+            "loop_wall_s": loop_wall, "loop_steal": steal, "phases_s": phases, "build_s": b.build_s,
             "passes": {k: len(v) for k, v in b.samples.items()},
         }
-        values = {"setup_s": statistics.median(b.setups), "peak_mem_mb": peak, **wl.e2e()}
+        values = {"setup_s": b.setup_s, "peak_mem_mb": jvm_mb + py_mb, **wl.e2e()}
         run["e2e"] = values
         if args.trace:
             values = _layer_metrics(b, wl, [m["name"] for m in metrics])

@@ -1,7 +1,7 @@
 """Steadiness report: run workloads N times and show each metric's spread.
 
     python3 perfbench/steady.py [--runs 10] [--first-seed 1] [--traced]
-                                [--workload NAME ...] [--json OUT]
+                                [--workload NAME ...]
 
 Runs ``perfbench/run.py`` once per seed, one run at a time, from the
 checkout root. For every end-to-end metric it prints the median, the
@@ -48,7 +48,6 @@ def main() -> int:
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--workload", action="append")
     ap.add_argument("--traced", action="store_true")
-    ap.add_argument("--json", help="also write every run's records here")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -56,7 +55,6 @@ def main() -> int:
     seconds = spec["run_seconds"]
     bounds = {m["name"]: m for m in spec["end_to_end"]}
     workloads = args.workload or [w["name"] for w in spec["workloads"]]
-    records = {}
     for w in workloads:
         runs = []
         for i in range(args.runs):
@@ -65,10 +63,12 @@ def main() -> int:
             traced = run_once(w, seed, seconds, 1) if args.traced else None
             runs.append({"seed": seed, "result": res, "record": rec, "traced": traced})
             print(f"{w} seed {seed}: correct={res['correct']} attempted={res['attempted']} "
-                  f"failed={res['failed']} "
+                  f"failed={res['failed']} steal={rec['run']['loop_steal']:.1%} "
                   + " ".join(f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()),
                   flush=True)
-        records[w] = runs
+            if traced:
+                print(f"{w} seed {seed} traced: correct={traced[0]['correct']} "
+                      f"failed={traced[0]['failed']}", flush=True)
 
         print(f"\n== {w}: {len(runs)} runs of {seconds} s")
         print(f"{'metric':<14}{'median':>10}{'q1':>10}{'q3':>10}{'min':>10}{'max':>10}"
@@ -90,9 +90,6 @@ def main() -> int:
                 plain = statistics.median(r["result"]["metrics"][name]["value"] for r in runs)
                 traced = statistics.median(r["traced"][1]["run"]["e2e"][name] for r in runs)
                 print(f"  tracing overhead {name}: {traced - plain:+.4g} ({(traced - plain) / plain:+.1%})")
-    if args.json:
-        with open(args.json, "w") as fh:
-            json.dump(records, fh)
     return 0
 
 

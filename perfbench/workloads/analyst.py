@@ -28,7 +28,7 @@ from perfbench import checks, gen
 BATCHES = 12
 LOOKUPS_PER_PASS = 8
 #: nominal seconds of one round (the lookups and one report pass)
-ROUND_S = 1.5
+ROUND_S = 3.0
 #: orders per lookup range (~4 lines each)
 LOOKUP_ORDERS = 200
 DIMS = ("orders", "customer", "supplier", "nation", "part")
@@ -62,6 +62,8 @@ REPORTS = {
 
 
 class AnalystRead:
+    CHANGE_FEED = False
+
     def __init__(self, b):
         self.b = b
         self.input = f"{b.tmp}/analyst/input"
@@ -102,10 +104,10 @@ class AnalystRead:
 
     def prime(self) -> None:
         """Untimed lookups until the driver-side read path is compiled: the
-        first dozen in a JVM run up to twice as long, by an amount that
+        first few in a JVM run up to twice as long, by an amount that
         varies with the host's load. (The first report pass is timed; with
-        three rounds its code generation stays out of the median.)"""
-        for _ in range(2 * LOOKUPS_PER_PASS):
+        four rounds its code generation stays out of the median.)"""
+        for _ in range(LOOKUPS_PER_PASS):
             self._lookup_once()
 
     def run(self) -> None:

@@ -2,10 +2,16 @@
 
 Each tick makes one source commit, runs ``IncrementalAggView.refresh()``
 and then drains one ``availableNow`` replication query. A cycle is an
-append, an upsert MERGE and a ``restore`` that rolls the MERGE back;
-``--seconds`` sets the number of cycles.
+append, an upsert MERGE, a second append and a ``restore`` that rolls
+that append back; ``--seconds`` sets the number of cycles.
 Freshness is the time from the start of the source commit until both
-the view and the replica reflect it.
+the view and the replica reflect it. ``op_p50_s`` is the median over
+append ticks alone, so that it compares ticks of one kind; ``pass_s``
+is a cycle's total, all four kinds included.
+
+Every change-feed window here is one commit, so the known over-count of
+a window that holds a file's original add and its re-add by ``restore``
+cannot occur, and these checks cannot report it.
 
 This is the only workload where the change-feed planners
 (``TxTable.changes`` behind the view, the streaming source behind the
@@ -26,14 +32,16 @@ INITIAL_ROWS = 5_000
 APPEND_ROWS = 1_000
 #: keys touched by one MERGE (half updated, half new)
 TOUCH = 200
-#: source commits of one cycle; ``restore`` rolls the MERGE back
-CYCLE = ("append", "merge", "restore")
+#: source commits of one cycle; ``restore`` rolls the second append back
+CYCLE = ("append", "merge", "append", "restore")
 #: nominal seconds of one cycle on the reference box
-CYCLE_S = 18.0
+CYCLE_S = 30.0
 MEASURES = {"n": ("count",), "sv": ("sum", "v")}
 
 
 class CdcFreshness:
+    CHANGE_FEED = True
+
     def __init__(self, b):
         self.b = b
         base = f"{b.tmp}/cdc"
@@ -43,8 +51,11 @@ class CdcFreshness:
         self.rng = np.random.default_rng([b.seed, 300])
         self.next_key = 0
         self.n_staged = 0
+        #: replayed snapshots of the head version and the one before it
+        #: (the restore target)
         self.history: dict[int, pd.DataFrame] = {}
         self.head = None
+        self.cycles: list[float] = []
         self.stream: dict[str, list[float]] = {}
         self.read_amp: list[float] = []
         self.change_rows: list[int] = []
@@ -67,6 +78,8 @@ class CdcFreshness:
 
     # -- set-up -----------------------------------------------------------------
     def build(self) -> None:
+        """The source's first commit, and the view and replica caught up
+        with it."""
         b = self.b
         path, rows = self.initial
         v = b.lake.tx(self.spath).commit(b.spark.read.parquet(path))
@@ -83,7 +96,10 @@ class CdcFreshness:
         self.replica = b.lake.tx(self.rpath)
 
     def warmup(self) -> None:
-        self.b.spark.range(100_000).selectExpr("id % 7 AS g").groupBy("g").count().collect()
+        """The view's refresh and the replica's head: both read their
+        logs and find nothing to do."""
+        self.view.refresh()
+        self.replica.latest_version()
 
     def prime(self) -> None:
         """Nothing: the table build already ran one tick's worth of each
@@ -92,10 +108,12 @@ class CdcFreshness:
     # -- the loop ---------------------------------------------------------------
     def run(self) -> None:
         for _ in self.b.units(CYCLE_S):
+            t0 = self.b.clock
             for kind in CYCLE:
                 if self.b.failing():
                     return
                 self._tick(kind)
+            self.cycles.append(self.b.clock - t0)
 
     def _tick(self, kind: str) -> None:
         b, src = self.b, self.src
@@ -130,9 +148,9 @@ class CdcFreshness:
         if not rec["ok"]:
             # what landed is unknown: continue from the table as it is
             self.head = src.latest_version()
-            self.history[self.head] = src.read().toPandas()
+            self.history = {self.head: src.read().toPandas()}
             return
-        b.sample("freshness", rec["wall"])
+        b.sample(kind, rec["wall"])
         prev = self.head
         if kind == "append":
             new = pd.concat([m, rows], ignore_index=True)
@@ -140,7 +158,7 @@ class CdcFreshness:
             new = pd.concat([m[~m["k"].isin(rows["k"])], rows], ignore_index=True)
         else:
             new = self.history[target]
-        self.history[v] = new
+        self.history = {prev: m, v: new}
         self.head = v
         self._check(rec, new)
         if b.traced:
@@ -189,8 +207,10 @@ class CdcFreshness:
         """Every tick is checked as it lands; nothing is left for the end."""
 
     def e2e(self) -> dict[str, float]:
-        fresh = self.b.samples["freshness"]
-        return {"op_p50_s": statistics.median(fresh), "pass_s": len(CYCLE) * statistics.mean(fresh)}
+        return {
+            "op_p50_s": statistics.median(self.b.samples["append"]),
+            "pass_s": statistics.median(self.cycles),
+        }
 
     def layer(self) -> dict[str, float]:
         out = {f"stream.{k}_s": statistics.median(v) for k, v in self.stream.items()}
@@ -198,6 +218,6 @@ class CdcFreshness:
             "replicate.read_amp": statistics.mean(self.read_amp) if self.read_amp else 0.0,
             "mview.delta_rows": statistics.mean(self.change_rows),
             "txlog.changes_rows": sum(self.change_rows),
-            "bypass.clock_commits": len(self.b.samples["freshness"]),
+            "bypass.clock_commits": sum(len(self.b.samples.get(k, [])) for k in set(CYCLE)),
         })
         return out
