@@ -12,8 +12,7 @@ on the heaviest bench key once eviction pressure built mid-suite).
 
 Graph operators were the first users (operators/graph.py round 8); the
 LM scorers joined in round 9 (the bigram-count scan feeds both the
-model build and the scoring join). ``release_persists`` in
-operators.graph remains the public name bench/verify import.
+model build and the scoring join).
 """
 
 from __future__ import annotations

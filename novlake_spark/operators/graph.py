@@ -31,10 +31,7 @@ from pyspark.sql import functions as F
 
 # Tracked lazy persists (see novlake_spark/cache.py): persists at
 # reuse points are registered and handed back by the caller's sweep
-# after each action. ``release_persists`` is the public name bench.py
-# and tools/verify_local.py import; it now releases EVERY tracked
-# operator cache (graph + LM), not just this module's.
-from novlake_spark.cache import release_tracked as release_persists  # noqa: F401
+# (cache.release_tracked) after each action.
 from novlake_spark.cache import track as _track
 
 

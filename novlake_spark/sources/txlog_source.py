@@ -39,12 +39,14 @@ a log-detected no-op. Python and JVM writers interoperate on the same
 log: both claim a version slot with an atomic create-if-absent on the
 same directory entry (Hadoop rename-no-overwrite vs ``os.link``).
 
-Log access here is pure Python (``os`` + ``json``) because the
-DataSource API runs outside any JVM: the driver plans from
-``_log/*.json`` directly and executors open only the data files their
-partition names. On an object store, swap ``open``/``listdir`` for an
-``fsspec`` filesystem — the protocol (numeric-basename entries,
-checkpoint fold, :func:`replay_adds`) is unchanged.
+Log access goes through the same :class:`~novlake_spark.txlog.LogReader`
+TxTable uses, and change micro-batches come from the same
+:func:`~novlake_spark.txlog.plan_changes`, so the source and
+``TxTable.changes`` cannot disagree. The reader has two filesystem
+seams: ``os`` for local and ``file:`` paths, Hadoop over py4j for every
+other scheme. The DataSource API's driver hooks and executors run in
+Python workers without a JVM, so this source serves local paths only;
+executors open just the data files their partition names.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ from __future__ import annotations
 import base64
 import json
 import os
+import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -79,16 +82,17 @@ from novlake_spark.txlog import (
     _BLOOM_M,
     _STAT_TYPES,
     CommitConflict,
-    ProtocolError,
+    LogReader,
     SchemaMismatch,
-    TxTable,
     _bloom_positions,
     _is_mapped,
     _is_superset,
+    _local_path,
     _phys_map,
     _stat_value,
+    appended_units,
     file_matches,
-    replay_adds,
+    plan_changes,
 )
 
 #: Change-feed metadata columns (match :meth:`TxTable.changes`).
@@ -98,210 +102,34 @@ _CDF_FIELDS = [
 ]
 
 
-def _local_path(path: str) -> str:
-    """Strip a ``file:`` scheme; reject remote schemes explicitly rather
-    than failing somewhere inside ``os.listdir``."""
-    if path.startswith("file://"):
-        return path[len("file:"):]
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    if "://" in path:
-        raise NotImplementedError(
-            f"txlog source reads local paths in this build; got {path!r} "
-            "(swap _PyLog's open/listdir for fsspec to target object stores)"
-        )
-    return path
+def _add_path(root: str, add: dict) -> str:
+    """Local path of an add-action's data file; honors a shallow-cloned
+    add's ``path`` the same way ``TxTable._data_path`` does."""
+    return _local_path(add.get("path") or f"{root}/data/{add['file']}")
 
 
-class _PyLog:
-    """Pure-Python replica of :class:`TxTable`'s log *reader* (no JVM,
-    no SparkSession) — exactly what the Data Source API's driver-side
-    planning hooks can use. Shares :func:`replay_adds` with the JVM
-    path so the two can never disagree on snapshot resolution."""
-
-    def __init__(self, path: str):
-        self.path = _local_path(path).rstrip("/")
-        self._log = os.path.join(self.path, "_log")
-        self._entries: dict[int, dict] = {}  # immutable once published
-
-    def _numeric(self, prefix: str = "", suffix: str = ".json") -> list[int]:
-        if not os.path.isdir(self._log):
-            return []
-        out = []
-        for name in os.listdir(self._log):
-            if not (name.startswith(prefix) and name.endswith(suffix)):
-                continue
-            stem = name[len(prefix):-len(suffix)]
-            if stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
-
-    def versions(self) -> list[int]:
-        return [v for v in self._numeric() ]
-
-    def checkpoints(self) -> list[int]:
-        return self._numeric(prefix="checkpoint-")
-
-    def latest_version(self) -> int | None:
-        vs, cps = self.versions(), self.checkpoints()
-        heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-        return max(heads) if heads else None
-
-    def version_at_time(self, ts_ms: int) -> int:
-        """TIMESTAMP AS OF resolution — mirrors TxTable.version_at_time
-        (entry ``ts_ms``, falling back to log-file mtime for
-        pre-timestamp entries)."""
-
-        def commit_ms(v: int) -> int:
-            e = self.read_entry(v)
-            if "ts_ms" in e:
-                return int(e["ts_ms"])
-            return int(os.path.getmtime(os.path.join(self._log, f"{v}.json")) * 1000)
-
-        candidates = [v for v in self.versions() if commit_ms(v) <= ts_ms]
-        if not candidates:
-            raise ValueError(
-                f"no commit at or before ts_ms={ts_ms} under {self.path}"
-            )
-        return max(candidates)
-
-    def read_entry(self, version: int) -> dict:
-        if version not in self._entries:
-            with open(os.path.join(self._log, f"{version}.json")) as f:
-                self._entries[version] = json.load(f)
-        return self._entries[version]
-
-    def full_state(
-        self, version: int | None = None
-    ) -> tuple[
-        list[dict], str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]
-    ]:
-        """(live add-actions, schema json, txn→version, constraints,
-        protocol, identity watermarks) — checkpoint + entry-tail fold,
-        mirroring ``TxTable._state_at`` (including its reader-side
-        protocol gate).
-
-        A concurrent ``clean_log`` can delete an entry between our
-        listing and our read; re-resolution against a fresh listing
-        (which then includes the newer checkpoint that replaced those
-        entries) makes the race invisible. Deadline-bounded like
-        ``TxTable._state_at`` (round 9): pure-Python reads are narrow,
-        but full-suite contention can still lap a fixed attempt count."""
-        from novlake_spark.txlog import _retry_missing
-
-        return _retry_missing(lambda: self._full_state_once(version))
-
-    def _full_state_once(
-        self, version: int | None = None
-    ) -> tuple[
-        list[dict], str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]
-    ]:
-        vs, cps = self.versions(), self.checkpoints()
-        protocol = {"min_reader": 1, "min_writer": 1}
-        identity: dict[str, int] = {}
-        if version is None:
-            heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-            if not heads:
-                return [], None, {}, {}, protocol, identity
-            upto = max(heads)
-        else:
-            upto = version
-            if upto not in vs and upto not in cps:
-                raise ValueError(f"version {upto} not in log {vs} or checkpoints {cps}")
-        cp = max((c for c in cps if c <= upto), default=None)
-        if cp is not None:
-            with open(os.path.join(self._log, f"checkpoint-{cp}.json")) as f:
-                doc = json.load(f)
-            if doc.get("adds_parquet"):
-                from novlake_spark.txlog import _decode_checkpoint_parquet
-
-                with open(
-                    os.path.join(self._log, f"checkpoint-{cp}.parquet"), "rb"
-                ) as f:
-                    doc["adds"] = _decode_checkpoint_parquet(f.read())
-            adds, schema_json = doc["adds"], doc.get("schema")
-            txns = dict(doc.get("txns", {}))
-            constraints = dict(doc.get("constraints", {}))
-            protocol = dict(doc.get("protocol", protocol))
-            identity = dict(doc.get("identity", {}))
-        else:
-            adds, schema_json, txns, constraints = [], None, {}, {}
-        entries = [self.read_entry(v) for v in vs if (cp is None or v > cp) and v <= upto]
-        for e in entries:
-            if "schema" in e:
-                schema_json = e["schema"]
-            if "txn" in e:
-                txns[e["txn"]] = e["version"]
-            constraints.update(e.get("set_constraints", {}))
-            for name in e.get("drop_constraints", []):
-                constraints.pop(name, None)
-            # per-field MAX, mirroring TxTable._state_at: protocol is
-            # monotone, so last-wins would let a stale republished entry
-            # downgrade the reader gate
-            for k, w in e.get("protocol", {}).items():
-                protocol[k] = max(protocol.get(k, 1), int(w))
-            for c, w in e.get("identity", {}).items():
-                identity[c] = max(identity.get(c, int(w)), int(w))
-        if protocol.get("min_reader", 1) > TxTable.READER_VERSION:
-            raise ProtocolError(
-                f"{self.path} requires min_reader={protocol['min_reader']} "
-                f"but this client supports {TxTable.READER_VERSION}; "
-                "upgrade the client to read this table"
-            )
-        return replay_adds(entries, base=adds), schema_json, txns, constraints, protocol, identity
-
-    def state_at(self, version: int | None = None) -> tuple[list[dict], str | None]:
-        adds, schema_json = self.full_state(version)[:2]
-        return adds, schema_json
-
-    def try_publish(self, entry: dict) -> bool:
-        """Pure-Python twin of ``TxTable._try_publish``: temp under
-        ``_log/_tmp``, then an atomic create-if-absent claim of the
-        version slot via ``os.link`` (hard-link creation fails when the
-        destination exists — POSIX's rename-no-overwrite). A JVM writer
-        racing this one loses or wins the same slot cleanly: Hadoop's
-        local rename and ``link`` are both atomic on the same directory
-        entry."""
-        import time as _time
-
-        if entry["version"] > 0:  # version 0 creates the table
-            proto = self.full_state()[4]
-            if proto.get("min_writer", 1) > TxTable.WRITER_VERSION:
-                raise ProtocolError(
-                    f"{self.path} requires min_writer={proto['min_writer']} "
-                    f"but this client supports {TxTable.WRITER_VERSION}; "
-                    "upgrade the client to write this table"
-                )
-        entry.setdefault("ts_ms", int(_time.time() * 1000))
-        tmp_dir = os.path.join(self._log, "_tmp")
-        os.makedirs(tmp_dir, exist_ok=True)
-        tmp = os.path.join(tmp_dir, uuid.uuid4().hex)
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        try:
-            os.link(tmp, os.path.join(self._log, f"{entry['version']}.json"))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-
-    def snapshot_files(self, version: int | None = None) -> list[str]:
-        return [a["file"] for a in self.state_at(version)[0]]
-
-    def schema_at(self, version: int | None = None) -> T.StructType | None:
-        schema_json = self.state_at(version)[1]
-        return None if schema_json is None else T.StructType.fromJson(json.loads(schema_json))
-
-    def data_path(self, file_name: str) -> str:
-        return os.path.join(self.path, "data", file_name)
-
-    def add_path(self, add: dict) -> str:
-        """Absolute path of an add-action's file — honors shallow-cloned
-        adds' ``path`` the same way ``TxTable._data_path`` does."""
-        if "path" in add:
-            return _local_path(add["path"])
-        return self.data_path(add["file"])
+def _publish_local(log: LogReader, entry: dict) -> bool:
+    """Pure-Python twin of ``TxTable._try_publish``: temp under
+    ``_log/_tmp``, then an atomic create-if-absent claim of the version
+    slot via ``os.link`` (hard-link creation fails when the destination
+    exists — POSIX's rename-no-overwrite). A JVM writer racing this one
+    loses or wins the same slot cleanly: Hadoop's local rename and
+    ``link`` are both atomic on the same directory entry."""
+    if entry["version"] > 0:  # version 0 creates the table
+        log.require_writer()
+    entry.setdefault("ts_ms", int(time.time() * 1000))
+    log_dir = os.path.join(_local_path(log.path), "_log")
+    os.makedirs(os.path.join(log_dir, "_tmp"), exist_ok=True)
+    tmp = os.path.join(log_dir, "_tmp", uuid.uuid4().hex)
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+    try:
+        os.link(tmp, os.path.join(log_dir, f"{entry['version']}.json"))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 @dataclass
@@ -395,7 +223,7 @@ def _to_predicates(filters: list[Filter]) -> list[tuple]:
     return preds
 
 
-def _resolve_version(log: _PyLog, options: dict) -> int | None:
+def _resolve_version(log: LogReader, options: dict) -> int | None:
     """Shared batch time-travel resolution: ``version`` wins, else
     ``timestampMs`` resolves through the commit timestamps."""
     version = options.get("version")
@@ -411,9 +239,9 @@ def _resolve_version(log: _PyLog, options: dict) -> int | None:
 
 class _TxLogBatchReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
-        self._log = _PyLog(options["path"])
+        self._log = LogReader(options["path"])
         version = _resolve_version(self._log, options)
-        adds, schema_json = self._log.state_at(version)
+        adds, schema_json = self._log.state(version)[:2]
         self._adds = adds
         self._target = _arrow_schema(schema)
         # logical→physical names on column-mapped tables (file columns
@@ -456,7 +284,7 @@ class _TxLogBatchReader(DataSourceReader):
 
     def partitions(self):
         parts = [
-            _FilePartition(self._log.add_path(a), dv=tuple(a.get("dv", [])))
+            _FilePartition(_add_path(self._log.path, a), dv=tuple(a.get("dv", [])))
             for a in self._adds
         ]
         return parts or [_FilePartition(None)]
@@ -471,9 +299,11 @@ class _TxLogBatchReader(DataSourceReader):
 class _TxLogStreamReader(DataSourceStreamReader):
     """Offsets are commit versions: offset ``{"version": N}`` means
     "everything through commit N is delivered". A micro-batch
-    ``(start, end]`` is exactly the files published by those commits —
-    deterministic from immutable log entries, so a replayed batch is
-    byte-identical and Spark's offset checkpoint gives exactly-once.
+    ``(start, end]`` is one partition per change unit of those commits
+    (:func:`~novlake_spark.txlog.plan_changes`, the derivation
+    :meth:`TxTable.changes` plans from) — deterministic from immutable
+    log entries, so a replayed batch is byte-identical and Spark's
+    offset checkpoint gives exactly-once.
 
     Modes:
 
@@ -500,7 +330,7 @@ class _TxLogStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema: T.StructType, options: dict):
-        self._log = _PyLog(options["path"])
+        self._log = LogReader(options["path"])
         self._cdf = str(options.get("readchangefeed", "false")).lower() == "true"
         self._ignore_changes = str(options.get("ignorechanges", "false")).lower() == "true"
         base_fields = schema.fields[:-2] if self._cdf else schema.fields
@@ -522,50 +352,20 @@ class _TxLogStreamReader(DataSourceStreamReader):
         return {"version": self._start_after if latest is None else max(latest, self._start_after)}
 
     def partitions(self, start: dict, end: dict):
-        parts: list[_FilePartition] = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            e = self._log.read_entry(v)
-            prior: dict[str, dict] = {}
-            if v > 0 and (e["mode"] == "overwrite" or e.get("remove") or e.get("set_dv")):
-                prior = {a["file"]: a for a in self._log.state_at(v - 1)[0]}
-            if e["mode"] == "overwrite" and v > 0:
-                removed = list(prior.values())
-            elif e.get("remove"):
-                # resolve remove names to full adds (clone-aware paths)
-                removed = [prior.get(f, {"file": f}) for f in e["remove"]]
-            else:
-                removed = []
-            set_dv = e.get("set_dv") or {}
-            if (removed or set_dv) and not self._cdf:
-                if not self._ignore_changes:
-                    raise ValueError(
-                        f"version {v} is not append-only (mode={e['mode']}, "
-                        f"{len(removed)} removes, {len(set_dv)} deletion "
-                        "vectors); stream with readChangeFeed=true for "
-                        "row-level deletes, or ignoreChanges=true to "
-                        "re-deliver rewritten rows"
-                    )
-            elif removed or set_dv:
-                # a removed file's delete rows exclude its prior DV (those
-                # rows were already reported deleted when the DV landed)
-                parts.extend(
-                    _FilePartition(
-                        self._log.add_path(a), "delete", v,
-                        dv=tuple(a.get("dv", [])),
-                    )
-                    for a in removed
-                )
-                parts.extend(
-                    _FilePartition(
-                        self._log.add_path(prior.get(f, {"file": f})),
-                        "delete", v, dv=tuple(ps), dv_mode="only",
-                    )
-                    for f, ps in set_dv.items()
-                )
-            parts.extend(
-                _FilePartition(self._log.add_path(a), "insert", v)
-                for a in e.get("add", [])
+        units = plan_changes(self._log, start["version"], end["version"])
+        if not self._cdf:
+            units = appended_units(
+                units,
+                self._ignore_changes,
+                "stream with readChangeFeed=true for row-level deletes, or "
+                "ignoreChanges=true to re-deliver rewritten rows",
             )
+        parts = [
+            _FilePartition(
+                _add_path(self._log.path, u.add), u.change_type, u.version, u.dv, u.dv_mode
+            )
+            for u in units
+        ]
         return parts or [_FilePartition(None)]
 
     def read(self, partition: _FilePartition):
@@ -612,7 +412,7 @@ class _WriterCore:
     and needs no second pass over the data."""
 
     def __init__(self, schema: T.StructType, options: dict, mode: str):
-        self._log = _PyLog(options["path"])
+        self._log = LogReader(options["path"])
         self._schema = schema
         self._mode = mode
         self._txn = options.get("txn")  # batch idempotency key
@@ -642,7 +442,7 @@ class _WriterCore:
 
         writer = None
         name = f"{uuid.uuid4().hex}.parquet"
-        path = self._log.data_path(name)
+        path = _add_path(self._log.path, {"file": name})
         rows = 0
         lo: dict = {}
         hi: dict = {}
@@ -709,7 +509,7 @@ class _WriterCore:
         for m in messages or []:
             if m is not None and m.file is not None:
                 try:
-                    os.unlink(self._log.data_path(m.file))
+                    os.unlink(_add_path(self._log.path, {"file": m.file}))
                 except FileNotFoundError:
                     pass
 
@@ -738,7 +538,7 @@ class _WriterCore:
     def _publish(self, messages, txn: str | None, max_retries: int = 20) -> int:
         adds = self._adds(messages)
         for _ in range(max_retries):
-            _, cur_schema_json, txns, constraints, _, identity = self._log.full_state()
+            cur_schema_json, txns, constraints, _, identity = self._log.meta()
             if txn is not None and txn in txns:
                 # replayed batch: the table already has this commit;
                 # this run's landed files are orphans
@@ -784,7 +584,7 @@ class _WriterCore:
                 entry["schema"] = schema_action
             if txn is not None:
                 entry["txn"] = txn
-            if self._log.try_publish(entry):
+            if _publish_local(self._log, entry):
                 return entry["version"]
             # lost the slot to a rival — loop re-reads the tail (pure
             # appends always compose; this writer never removes files)
@@ -828,7 +628,7 @@ class TxLogDataSource(DataSource):
         return "txlog"
 
     def schema(self) -> T.StructType:
-        log = _PyLog(self.options["path"])
+        log = LogReader(self.options["path"])
         schema = log.schema_at(_resolve_version(log, self.options))
         if schema is None:
             raise FileNotFoundError(f"no committed schema under {self.options['path']}")

@@ -1,19 +1,21 @@
-"""Exactly-once Structured Streaming sinks onto the transaction log.
+"""Exactly-once Structured Streaming upsert sink onto the transaction log.
 
 ``foreachBatch`` gives at-least-once invocation: after a failure the
-engine replays the last micro-batch. These helpers turn that into
+engine replays the last micro-batch. This helper turns that into
 exactly-once table state by keying every commit with
 ``"<query-id>.<batch-id>"`` — :meth:`TxTable.commit`/:meth:`~TxTable.merge`
 skip a txn id already in the log, so a replayed batch is a no-op (the
 idempotent-sink pattern from the Structured Streaming docs, with the
 txn ledger living in the table's own commit log instead of a side
-store; markers survive checkpointing + clean_log, see txlog._state_at).
+store; markers survive checkpointing + clean_log, see txlog.LogReader.state).
+
+Exactly-once APPENDS need no helper: ``writeStream.format("txlog")``
+with ``txnAppId`` commits each micro-batch under ``<appId>@<batchId>``.
 
 Scale notes: each micro-batch costs one commit (one log publish); the
 upsert sink's MERGE is stats-scoped, so a keyed stream whose keys
 cluster (e.g. recent ids) rewrites only the overlapping files per
-batch. Appends compose under contention — concurrent writers to the
-same table just retry the cheap log publish, never the data write.
+batch.
 """
 
 from __future__ import annotations
@@ -23,17 +25,6 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from novlake_spark.txlog import TxTable
-
-
-def txtable_append_sink(path: str) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` callable: append each micro-batch to the
-    transaction-logged table at ``path`` exactly once."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        t = TxTable(batch_df.sparkSession, path)
-        t.commit(batch_df, txn=f"{_qid(batch_df)}.{batch_id}")
-
-    return sink
 
 
 def txtable_upsert_sink(path: str, key: list[str]) -> Callable[[DataFrame, int], None]:

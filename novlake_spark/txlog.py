@@ -46,11 +46,15 @@ from __future__ import annotations
 
 import base64
 import datetime
+import functools
 import hashlib
 import json
 import logging
+import os
 import time
 import uuid
+from typing import NamedTuple
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
@@ -245,6 +249,418 @@ def replay(entries: list[dict]) -> list[str]:
     """Live file names from ordered log entries (property-tested in
     isolation; the stats-carrying variant is :func:`replay_adds`)."""
     return [a["file"] for a in replay_adds(entries)]
+
+
+# -- the log reader -------------------------------------------------------
+# One reader serves TxTable, the format("txlog") data source and its
+# streaming source. All of its I/O goes through a two-method filesystem
+# seam — list a directory (names and mtimes), read a file's bytes — so
+# the checkpoint+tail fold, the protocol gate and the clean_log retry
+# exist once. Local and file: paths use os (no JVM round trip per
+# listing or entry); every other scheme goes through Hadoop over py4j,
+# the only seam that reaches remote filesystems.
+
+
+def _local_path(path: str) -> str:
+    """``path`` without its ``file:`` scheme, for ``os`` calls."""
+    return path[len("file:"):] if path.startswith("file:") else path
+
+
+def _is_local(path: str) -> bool:
+    """Scheme-less and ``file:`` paths are local; the rest are remote."""
+    return urlparse(path).scheme in ("", "file")
+
+
+class _OsFS:
+    """Log I/O on a local path through ``os``."""
+
+    def listdir(self, path: str) -> dict[str, int]:
+        """name → mtime (ms) of ``path``'s entries; {} when it is absent."""
+        out: dict[str, int] = {}
+        try:
+            with os.scandir(_local_path(path)) as it:
+                for d in it:
+                    try:
+                        out[d.name] = d.stat().st_mtime_ns // 1_000_000
+                    except FileNotFoundError:
+                        continue  # deleted by a concurrent clean_log
+        except FileNotFoundError:
+            pass
+        return out
+
+    def read(self, path: str) -> bytes:
+        with open(_local_path(path), "rb") as f:
+            return f.read()
+
+
+class _HadoopFS:
+    """Log I/O through the Hadoop FileSystem API over py4j."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        jvm = spark._jvm
+        self._path = jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+        self._io = jvm.org.apache.commons.io.IOUtils
+
+    def listdir(self, path: str) -> dict[str, int]:
+        try:
+            statuses = self._fs.listStatus(self._path(path))
+        except Exception as exc:  # noqa: BLE001 — py4j wraps IOException
+            # an absent directory is an empty log; a file vanishing
+            # mid-listing re-raises into the clean_log retry
+            if _missing_file(exc) and not self._fs.exists(self._path(path)):
+                return {}
+            raise
+        return {s.getPath().getName(): int(s.getModificationTime()) for s in statuses}
+
+    def read(self, path: str) -> bytes:
+        stream = self._fs.open(self._path(path))
+        try:
+            return bytes(self._io.toByteArray(stream))
+        finally:
+            stream.close()
+
+
+def _numbered(names, prefix: str) -> list[int]:
+    """Sorted N of every ``<prefix>N.json`` in ``names``. Only purely
+    numeric stems count, so a half-written or foreign file can never
+    brick readers with an unparseable version."""
+    out = []
+    for name in names:
+        if name.startswith(prefix) and name.endswith(".json"):
+            stem = name[len(prefix):-len(".json")]
+            if stem.isdigit():
+                out.append(int(stem))
+    return sorted(out)
+
+
+def _head(vs: list[int], cps: list[int]) -> int | None:
+    """Newest resolvable version — entry OR checkpoint (after clean_log
+    the tail may live only in a checkpoint; computing the next version
+    from entries alone would re-claim a version number below the
+    checkpoint, whose entry replay then IGNORES)."""
+    return max(vs[-1:] + cps[-1:], default=None)
+
+
+def _resolve(vs: list[int], cps: list[int], version: int | None) -> int | None:
+    """The version a snapshot request resolves to: the head for None,
+    else ``version`` itself, which must be a listed entry or checkpoint
+    (an unknown version is an error, not a silent resolve-to-latest)."""
+    if version is None:
+        return _head(vs, cps)
+    if version not in vs and version not in cps:
+        raise ValueError(f"version {version} not in log {vs} or checkpoints {cps}")
+    return version
+
+
+class LogReader:
+    """Reads one table's ``_log/``: listing, the immutable-entry cache,
+    JSON and parquet-sidecar checkpoint decode, the checkpoint+tail
+    fold (with or without the add list), the protocol gates and
+    ``TIMESTAMP AS OF`` resolution.
+
+    All I/O goes through ``fs``, a seam of two methods: ``listdir``
+    (names and mtimes) and ``read`` (a file's bytes). Scheme-less and
+    ``file:`` paths default to ``os``; any other scheme needs the
+    Hadoop seam (``_HadoopFS``, built from a SparkSession), which is
+    what TxTable passes for remote tables. Without a JVM the reader
+    still serves local tables — the Python data source plans from it."""
+
+    #: Protocol capability of THIS implementation (Delta's protocol
+    #: action, simplified to two integers). Tables carry a
+    #: ``{"protocol": {"min_reader": r, "min_writer": w}}`` action
+    #: (absent = 1/1); state resolution refuses to proceed when
+    #: ``min_reader`` exceeds READER_VERSION and every publish refuses
+    #: when ``min_writer`` exceeds WRITER_VERSION — so an older client
+    #: can never misread actions it doesn't understand or publish a
+    #: commit that ignores invariants a newer feature established.
+    #: Version 2 is current (deletion vectors + column DDL era).
+    READER_VERSION: int = 2
+    WRITER_VERSION: int = 2
+
+    def __init__(self, path: str, fs=None):
+        self.path = path.rstrip("/")
+        if fs is None:
+            if not _is_local(self.path):
+                raise NotImplementedError(
+                    f"{self.path!r} is remote: only the Hadoop seam reads it, "
+                    "which needs a SparkSession (open it through TxTable)"
+                )
+            fs = _OsFS()
+        self.fs = fs
+        self._entries: dict[int, dict] = {}  # entries are immutable once published
+        # (head version, protocol) — protocol is immutable per head, so
+        # the writer gate resolves it once per head
+        self._protocol: tuple[int | None, dict[str, int]] | None = None
+
+    # -- listing and raw reads ---------------------------------------------
+    def _file(self, name: str) -> str:
+        return f"{self.path}/_log/{name}"
+
+    def listing(self) -> tuple[list[int], list[int]]:
+        """(entry versions, checkpoint versions) from ONE listing."""
+        names = self.fs.listdir(f"{self.path}/_log")
+        return _numbered(names, ""), _numbered(names, "checkpoint-")
+
+    def versions(self) -> list[int]:
+        return self.listing()[0]
+
+    def checkpoints(self) -> list[int]:
+        return self.listing()[1]
+
+    def latest_version(self) -> int | None:
+        return _head(*self.listing())
+
+    def read_entry(self, version: int) -> dict:
+        if version not in self._entries:
+            self._entries[version] = json.loads(self.fs.read(self._file(f"{version}.json")))
+        return self._entries[version]
+
+    def checkpoint_doc(self, version: int) -> dict:
+        """Checkpoint JSON document WITHOUT decoding the parquet add-list
+        sidecar — the doc itself stays O(schema + txns + protocol) no
+        matter how many files the table holds."""
+        return json.loads(self.fs.read(self._file(f"checkpoint-{version}.json")))
+
+    def read_checkpoint(self, version: int) -> dict:
+        """Checkpoint document with its add list, decoded from the
+        parquet sidecar when the checkpoint has one."""
+        doc = self.checkpoint_doc(version)
+        if doc.get("adds_parquet"):
+            doc["adds"] = _decode_checkpoint_parquet(
+                self.fs.read(self._file(f"checkpoint-{version}.parquet"))
+            )
+        return doc
+
+    # -- snapshot resolution -----------------------------------------------
+    def state(
+        self, version: int | None = None, with_adds: bool = True
+    ) -> tuple[
+        list[dict], str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]
+    ]:
+        """(live add-actions, schema json, txn→version map, constraint
+        name→expr map, protocol, identity watermarks) at ``version``
+        (default latest): nearest checkpoint ≤ version, then fold the
+        entry tail. ``with_adds=False`` is the metadata-only fold: the
+        checkpoint *document* carries every metadata map, so no sidecar
+        decode and no replay happen — the commit path's identity,
+        constraint and idempotency reads must not cost O(files).
+
+        A concurrent ``clean_log`` can delete a superseded checkpoint,
+        its sidecar or a tail entry between our listing and our read;
+        re-resolving against a fresh listing (which then includes the
+        newer checkpoint that replaced them) makes the race invisible.
+        The retry is deadline-bounded (:func:`_retry_missing`)."""
+
+        def once():
+            vs, cps = self.listing()
+            return self._fold(vs, cps, _resolve(vs, cps, version), with_adds)
+
+        return _retry_missing(once)
+
+    def _fold(self, vs: list[int], cps: list[int], upto: int | None, with_adds: bool):
+        """:meth:`state` over one listing. The txn/constraint/protocol/
+        identity maps ride the checkpoint so ``clean_log`` never forgets
+        an idempotency marker (a replayed foreachBatch batch must stay a
+        no-op even after its entry is cleaned), an active CHECK
+        constraint, a protocol upgrade, or an allocated id range.
+
+        Raises :class:`ProtocolError` when the folded protocol demands a
+        reader newer than this implementation — enforced HERE, the one
+        choke point every snapshot/DML/CDF/maintenance consumer resolves
+        state through, so no code path can act on actions it might not
+        fully understand."""
+        protocol = {"min_reader": 1, "min_writer": 1}
+        if upto is None:
+            return [], None, {}, {}, protocol, {}
+        cp = max((c for c in cps if c <= upto), default=None)
+        doc: dict = {}
+        if cp is not None:
+            # metadata-only resolution skips the sidecar decode entirely
+            doc = self.read_checkpoint(cp) if with_adds else self.checkpoint_doc(cp)
+        schema_json = doc.get("schema")
+        txns = dict(doc.get("txns", {}))
+        constraints = dict(doc.get("constraints", {}))
+        protocol = dict(doc.get("protocol", protocol))
+        identity = dict(doc.get("identity", {}))
+        entries = [self.read_entry(v) for v in vs if (cp is None or v > cp) and v <= upto]
+        for e in entries:
+            if "schema" in e:
+                schema_json = e["schema"]
+            if "txn" in e:
+                txns[e["txn"]] = e["version"]
+            constraints.update(e.get("set_constraints", {}))
+            for name in e.get("drop_constraints", []):
+                constraints.pop(name, None)
+            # protocol folds as a per-field MAX, never last-wins:
+            # requirements are monotone by construction (upgrade_protocol
+            # rejects downgrades), so an entry republished from stale
+            # state by a lost upgrade race can never roll back a gate a
+            # concurrent enable_column_mapping already raised
+            for k, w in e.get("protocol", {}).items():
+                protocol[k] = max(protocol.get(k, 1), int(w))
+            # watermarks fold as a MAX, never last-wins: a commit that
+            # only re-adds old rows (compaction) must not regress the
+            # high-water mark a later allocation depends on
+            for c, w in e.get("identity", {}).items():
+                identity[c] = max(identity.get(c, int(w)), int(w))
+        if protocol.get("min_reader", 1) > self.READER_VERSION:
+            raise ProtocolError(
+                f"{self.path} requires min_reader="
+                f"{protocol['min_reader']} but this client supports "
+                f"{self.READER_VERSION}; upgrade the client to read this table"
+            )
+        folded = replay_adds(entries, base=doc.get("adds", [])) if with_adds else []
+        return folded, schema_json, txns, constraints, protocol, identity
+
+    def meta(
+        self, version: int | None = None
+    ) -> tuple[str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]]:
+        """(schema json, txns, constraints, protocol, identity) WITHOUT
+        folding the add list (see :meth:`state`)."""
+        return self.state(version, with_adds=False)[1:]
+
+    def snapshot_adds(self, version: int | None = None) -> list[dict]:
+        return self.state(version)[0]
+
+    def schema_at(self, version: int | None = None) -> T.StructType | None:
+        schema_json = self.meta(version)[0]
+        return None if schema_json is None else T.StructType.fromJson(json.loads(schema_json))
+
+    def protocol_fast(self) -> dict[str, int]:
+        """Protocol at the current head, cached per head version so
+        back-to-back commits pay one listing, not one fold. Metadata-only
+        (the sidecar is never decoded): the writer gate runs on every
+        commit attempt, and must not cost O(table state) on exactly the
+        million-file tables the sidecar exists for."""
+
+        def once():
+            vs, cps = self.listing()
+            head = _head(vs, cps)
+            if self._protocol is None or self._protocol[0] != head:
+                self._protocol = (head, self._fold(vs, cps, head, with_adds=False)[4])
+            return dict(self._protocol[1])
+
+        return _retry_missing(once)
+
+    def require_writer(self) -> None:
+        """The writer-side protocol gate every publish passes: a client
+        below the table's ``min_writer`` must not publish at all (its
+        commit could silently break an invariant a newer feature relies
+        on)."""
+        proto = self.protocol_fast()
+        if proto.get("min_writer", 1) > self.WRITER_VERSION:
+            raise ProtocolError(
+                f"{self.path} requires min_writer={proto['min_writer']} "
+                f"but this client supports {self.WRITER_VERSION}; "
+                "upgrade the client to write this table"
+            )
+
+    # -- time travel --------------------------------------------------------
+    def commit_time_ms(self, version: int, mtimes: dict[str, int] | None = None) -> int:
+        """Wall-clock commit time of ``version``. Entries published
+        before timestamps existed fall back to the log file's
+        modification time (what Delta does for its checkpoint-era
+        entries) — monotone enough for time travel, and exact for every
+        entry written since."""
+        e = self.read_entry(version)
+        if "ts_ms" in e:
+            return int(e["ts_ms"])
+        if mtimes is None:
+            mtimes = self.fs.listdir(f"{self.path}/_log")
+        return mtimes[f"{version}.json"]
+
+    def version_at_time(self, ts_ms: int) -> int:
+        """Newest version whose commit time is <= ``ts_ms`` —
+        ``TIMESTAMP AS OF`` resolution. Raises if the table didn't exist
+        yet at that time (or its early history was cleaned)."""
+        mtimes = self.fs.listdir(f"{self.path}/_log")
+        candidates = [
+            v for v in _numbered(mtimes, "") if self.commit_time_ms(v, mtimes) <= ts_ms
+        ]
+        if not candidates:
+            raise ValueError(
+                f"no commit at or before ts_ms={ts_ms} under {self.path} "
+                "(table younger than that, or history cleaned past it)"
+            )
+        return max(candidates)
+
+
+# -- change feed planning -------------------------------------------------
+
+
+class ChangeUnit(NamedTuple):
+    """One file's contribution to the change feed of one commit: its
+    rows tagged ``change_type`` at ``version``, minus the row positions
+    in ``dv`` (``dv_mode='exclude'``) or exactly those positions
+    (``'only'`` — a ``set_dv`` action's newly deleted rows)."""
+
+    add: dict
+    change_type: str  # "insert" | "delete"
+    version: int
+    dv: tuple
+    dv_mode: str  # "exclude" | "only"
+
+
+def plan_changes(log: LogReader, from_v: int, to_v: int) -> list[ChangeUnit]:
+    """File-level change units of commits ``(from_v, to_v]`` — the one
+    change derivation behind :meth:`TxTable.changes`,
+    :meth:`TxTable.read_incremental` and the streaming source.
+
+    Purely log-based: a commit's ``add`` files are its inserts, its
+    ``remove`` files (the whole prior snapshot for an overwrite) are its
+    deletes, and a ``set_dv`` action deletes exactly its positions. A
+    removed file's delete excludes its prior DV (those rows were
+    reported deleted when the DV landed); an added file's insert
+    excludes the DV it carries (RESTORE re-publishes vectored adds). The
+    prior snapshot is folded only once a commit needs it, then rolled
+    forward entry by entry — a pure-append window never folds state."""
+    units: list[ChangeUnit] = []
+    live: list[dict] | None = None  # snapshot before commit v, once needed
+    for v in range(from_v + 1, to_v + 1):
+        e = log.read_entry(v)
+        set_dv = e.get("set_dv") or {}
+        if e["mode"] == "overwrite" or e.get("remove") or set_dv:
+            if live is None:
+                live = log.snapshot_adds(v - 1) if v > 0 else []
+            # remove lists carry names; resolve each to its full add
+            # action (DV and clone-aware path)
+            prior = {a["file"]: a for a in live}
+            removed = (
+                live
+                if e["mode"] == "overwrite"
+                else [prior.get(f, {"file": f}) for f in e.get("remove", [])]
+            )
+            units += [
+                ChangeUnit(a, "delete", v, tuple(a.get("dv", [])), "exclude")
+                for a in removed
+            ]
+            units += [
+                ChangeUnit(prior.get(f, {"file": f}), "delete", v, tuple(ps), "only")
+                for f, ps in set_dv.items()
+            ]
+        units += [
+            ChangeUnit(a, "insert", v, tuple(a.get("dv", [])), "exclude")
+            for a in e.get("add", [])
+        ]
+        if live is not None:
+            live = replay_adds([e], base=live)
+    return units
+
+
+def appended_units(units: list[ChangeUnit], ignore_changes: bool, hint: str) -> list[ChangeUnit]:
+    """The insert units of an append-only window. A commit that deletes
+    rows means added-files-only is NOT the row-level delta, so it raises
+    unless ``ignore_changes`` (rewritten files' rows then re-deliver —
+    Delta's ``ignoreChanges`` contract; consumers must be idempotent)."""
+    if not ignore_changes:
+        for u in units:
+            if u.change_type == "delete":
+                raise ValueError(
+                    f"version {u.version} is not append-only (it removes, "
+                    f"overwrites or deletion-vectors rows); {hint}"
+                )
+    return [u for u in units if u.change_type == "insert"]
 
 
 # Column types that get min/max stats in add actions. Decimals are
@@ -546,11 +962,15 @@ class TxTable:
     ``schema`` appears on the commit that establishes or evolves it.
 
     Temp entries live under ``_log/_tmp/`` — OUTSIDE the ``*.json``
-    namespace ``versions()`` globs — and ``versions()`` additionally
+    namespace ``versions()`` lists — and ``versions()`` additionally
     accepts only purely-numeric basenames, so a writer that dies
     mid-publish can never brick readers with an unparseable name
     (double defense; the single-glob version of this was a real
     crash-the-table bug, see ADVICE round 2).
+
+    Reads go through one :class:`LogReader` (``os`` on local paths,
+    Hadoop over py4j elsewhere); publishes, checkpoints and data files
+    are written through the Hadoop FileSystem API.
     """
 
     #: Auto-checkpoint cadence: every Nth version writes a checkpoint
@@ -559,67 +979,46 @@ class TxTable:
     #: commits accumulate.
     checkpoint_interval: int = 10
 
-    #: Protocol capability of THIS implementation (Delta's protocol
-    #: action, simplified to two integers). Tables carry a
-    #: ``{"protocol": {"min_reader": r, "min_writer": w}}`` action
-    #: (absent = 1/1); state resolution refuses to proceed when
-    #: ``min_reader`` exceeds READER_VERSION and every publish refuses
-    #: when ``min_writer`` exceeds WRITER_VERSION — so an older client
-    #: can never misread actions it doesn't understand or publish a
-    #: commit that ignores invariants a newer feature established.
-    #: Version 2 is current (deletion vectors + column DDL era).
-    READER_VERSION: int = 2
-    WRITER_VERSION: int = 2
+    READER_VERSION: int = LogReader.READER_VERSION
+    WRITER_VERSION: int = LogReader.WRITER_VERSION
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._fs = self._jpath(self.path).getFileSystem(spark._jsc.hadoopConfiguration())
-        self._entry_cache: dict[int, dict] = {}  # entries are immutable once published
-        # (head version, protocol) — protocol is immutable per head, so
-        # the writer gate in _try_publish resolves it once per head
-        self._protocol_cache: tuple[int, dict[str, int]] | None = None
+        self._log = LogReader(
+            self.path, None if _is_local(self.path) else _HadoopFS(spark, self.path)
+        )
         #: Columns to build per-file Bloom filters for on commit (point-
         #: lookup skipping on high-cardinality int/string keys — min/max
         #: can't prune those). Set before committing; files written
         #: earlier simply lack the filter and stay conservatively kept.
         self.bloom_cols: list[str] = []
 
-    # -- log primitives ----------------------------------------------------
-    def _log_path(self, version: int):
-        return self._jpath(f"{self.path}/_log/{version}.json")
+    # Writes (and data-file checks on remote tables) go through Hadoop;
+    # opened on first use, so a read-only TxTable on a local path never
+    # touches py4j for log work.
+    @functools.cached_property
+    def _jpath(self):
+        return self.spark._jvm.org.apache.hadoop.fs.Path
 
+    @functools.cached_property
+    def _fs(self):
+        return self._jpath(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+
+    def _exists(self, path: str) -> bool:
+        if isinstance(self._log.fs, _OsFS):
+            return os.path.exists(_local_path(path))
+        return bool(self._fs.exists(self._jpath(path)))
+
+    # -- log primitives ----------------------------------------------------
     def versions(self) -> list[int]:
-        statuses = self._fs.globStatus(self._jpath(f"{self.path}/_log/*.json")) or []
-        out = []
-        for s in statuses:
-            name = s.getPath().getName().removesuffix(".json")
-            if name.isdigit():  # ignore anything that is not a committed version
-                out.append(int(name))
-        return sorted(out)
+        return self._log.versions()
+
+    def checkpoints(self) -> list[int]:
+        return self._log.checkpoints()
 
     def latest_version(self) -> int | None:
-        """Newest resolvable version — entry OR checkpoint (after
-        clean_log the tail may live only in a checkpoint; computing the
-        next version from entries alone would re-claim a version number
-        below the checkpoint, whose entry replay then IGNORES)."""
-        vs, cps = self.versions(), self.checkpoints()
-        heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-        return max(heads) if heads else None
-
-    def _read_entry(self, version: int) -> dict:
-        if version in self._entry_cache:
-            return self._entry_cache[version]
-        stream = self._fs.open(self._log_path(version))
-        try:
-            data = bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        entry = json.loads(data.decode())
-        self._entry_cache[version] = entry
-        return entry
+        return self._log.latest_version()
 
     def _try_publish(self, entry: dict) -> bool:
         """Atomically claim ``entry['version']``: write a temp file under
@@ -631,31 +1030,24 @@ class TxTable:
         Every entry is stamped ``ts_ms`` (commit wall time) here — the
         single choke point all JVM-side publishes pass through — which
         is what ``TIMESTAMP AS OF`` time travel resolves against. Being
-        the choke point also makes it the writer-side protocol gate: a
-        client below the table's ``min_writer`` must not publish at all
-        (its commit could silently break an invariant a newer feature
-        relies on).
+        the choke point also makes it the writer-side protocol gate
+        (:meth:`LogReader.require_writer`).
         """
         if entry["version"] > 0:  # version 0 creates the table; nothing to gate
-            proto = self._protocol_fast()
-            if proto.get("min_writer", 1) > self.WRITER_VERSION:
-                raise ProtocolError(
-                    f"{self.path} requires min_writer={proto['min_writer']} "
-                    f"but this client supports {self.WRITER_VERSION}; "
-                    "upgrade the client to write this table"
-                )
-        entry.setdefault(
-            "ts_ms", int(self.spark._jvm.java.lang.System.currentTimeMillis())
-        )
+            self._log.require_writer()
+        entry.setdefault("ts_ms", int(time.time() * 1000))
+        return self._claim(f"{entry['version']}.json", json.dumps(entry).encode())
+
+    def _claim(self, name: str, data: bytes) -> bool:
+        """Publish ``data`` as ``_log/<name>`` unless that exists: a temp
+        file under ``_log/_tmp/``, then :func:`atomic_claim`."""
         tmp = self._jpath(f"{self.path}/_log/_tmp/{uuid.uuid4().hex}")
         out = self._fs.create(tmp, False)
         try:
-            out.write(bytearray(json.dumps(entry).encode()))
+            out.write(bytearray(data))
         finally:
             out.close()
-        return atomic_claim(
-            self.spark, self._fs, tmp, self._log_path(entry["version"])
-        )
+        return atomic_claim(self.spark, self._fs, tmp, self._jpath(f"{self.path}/_log/{name}"))
 
     # -- checkpoints ---------------------------------------------------------
     # At 100 TB-scale commit counts, replaying every JSON entry per read
@@ -664,36 +1056,6 @@ class TxTable:
     # then fold only the tail (C, upto]. Same role as Delta's parquet
     # checkpoints — JSON here; swapping the payload to parquet when the
     # add-list reaches millions of files changes no protocol.
-    def _checkpoint_path(self, version: int):
-        return self._jpath(f"{self.path}/_log/checkpoint-{version}.json")
-
-    def checkpoints(self) -> list[int]:
-        statuses = self._fs.globStatus(
-            self._jpath(f"{self.path}/_log/checkpoint-*.json")
-        ) or []
-        out = []
-        for s in statuses:
-            name = s.getPath().getName().removeprefix("checkpoint-").removesuffix(".json")
-            if name.isdigit():
-                out.append(int(name))
-        return sorted(out)
-
-    def _read_checkpoint(self, version: int) -> dict:
-        doc = json.loads(self._read_bytes(self._checkpoint_path(version)).decode())
-        if doc.get("adds_parquet"):
-            doc["adds"] = _decode_checkpoint_parquet(
-                self._read_bytes(
-                    self._jpath(f"{self.path}/_log/checkpoint-{version}.parquet")
-                )
-            )
-        return doc
-
-    def _read_bytes(self, jpath) -> bytes:
-        stream = self._fs.open(jpath)
-        try:
-            return bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
 
     #: Above this many live add-actions a checkpoint stores its add
     #: list as a columnar PARQUET sidecar (checkpoint-N.parquet) instead
@@ -715,7 +1077,7 @@ class TxTable:
         upto = self.latest_version() if version is None else version
         if upto is None:
             raise FileNotFoundError(f"nothing to checkpoint under {self.path}")
-        adds, schema_json, txns, constraints, protocol, identity = self._state_at(upto)
+        adds, schema_json, txns, constraints, protocol, identity = self._log.state(upto)
         doc = {"version": upto, "adds": adds}
         if schema_json is not None:
             doc["schema"] = schema_json
@@ -730,13 +1092,7 @@ class TxTable:
         if len(adds) >= self.parquet_checkpoint_rows:
             self._write_checkpoint_parquet(upto, adds)
             doc = {**doc, "adds": [], "adds_parquet": True}
-        tmp = self._jpath(f"{self.path}/_log/_tmp/{uuid.uuid4().hex}")
-        out = self._fs.create(tmp, False)
-        try:
-            out.write(bytearray(json.dumps(doc).encode()))
-        finally:
-            out.close()
-        atomic_claim(self.spark, self._fs, tmp, self._checkpoint_path(upto))
+        self._claim(f"checkpoint-{upto}.json", json.dumps(doc).encode())
         return upto  # a lost claim means a rival already checkpointed it
 
     def _write_checkpoint_parquet(self, version: int, adds: list[dict]) -> None:
@@ -769,14 +1125,8 @@ class TxTable:
         )
         buf = io.BytesIO()
         pq.write_table(table, buf, compression="zstd")
-        tmp = self._jpath(f"{self.path}/_log/_tmp/{uuid.uuid4().hex}")
-        out = self._fs.create(tmp, False)
-        try:
-            out.write(bytearray(buf.getvalue()))
-        finally:
-            out.close()
-        dst = self._jpath(f"{self.path}/_log/checkpoint-{version}.parquet")
-        atomic_claim(self.spark, self._fs, tmp, dst)  # rival's copy is identical
+        # a lost claim is harmless: the rival's copy is identical
+        self._claim(f"checkpoint-{version}.parquet", buf.getvalue())
 
     def clean_log(self, keep_from_version: int) -> list[int]:
         """Delete log entries no retained snapshot needs: everything at
@@ -785,17 +1135,18 @@ class TxTable:
         retained tail). Time travel below the checkpoint stops working —
         the log-side analogue of :meth:`vacuum`. Requires such a
         checkpoint to exist."""
-        cps = [c for c in self.checkpoints() if c <= keep_from_version]
+        vs, cps = self._log.listing()
+        cps = [c for c in cps if c <= keep_from_version]
         if not cps:
             raise ValueError(
                 f"no checkpoint <= {keep_from_version}; checkpoint() first"
             )
         horizon = max(cps)
         removed = []
-        for v in self.versions():
+        for v in vs:
             if v <= horizon:
-                self._fs.delete(self._log_path(v), False)
-                self._entry_cache.pop(v, None)
+                self._fs.delete(self._jpath(f"{self.path}/_log/{v}.json"), False)
+                self._log._entries.pop(v, None)
                 removed.append(v)
         # checkpoints BELOW the horizon are now strictly superseded —
         # every snapshot they could resolve is below the retention
@@ -803,185 +1154,35 @@ class TxTable:
         # go with the entries instead of accumulating forever
         for c in cps:
             if c < horizon:
-                self._fs.delete(self._checkpoint_path(c), False)
-                self._fs.delete(
-                    self._jpath(f"{self.path}/_log/checkpoint-{c}.parquet"), False
-                )
+                for ext in ("json", "parquet"):
+                    self._fs.delete(
+                        self._jpath(f"{self.path}/_log/checkpoint-{c}.{ext}"), False
+                    )
         return removed
 
     # -- snapshot resolution -----------------------------------------------
-    def _protocol_fast(self) -> dict[str, int]:
-        """Protocol at the current head WITHOUT folding adds.
-
-        ``_try_publish`` gates every commit attempt on ``min_writer``;
-        resolving that through ``_state_at`` would materialize the full
-        live add list (including decoding the parquet checkpoint
-        sidecar) per attempt — O(table state) on exactly the
-        million-file tables the sidecar exists for. Protocol needs only
-        the checkpoint *document*'s protocol field (sidecar untouched)
-        plus a per-field max over the entry tail, and the result is
-        cached per resolved head version so back-to-back commits pay
-        one listing, not one replay. A checkpoint deleted by a
-        concurrent ``clean_log`` between listing and read retries
-        against a fresh listing under the same deadline-bounded
-        contract as ``_state_at``."""
-        return _retry_missing(self._protocol_fast_once)
-
-    def _protocol_fast_once(self) -> dict[str, int]:
-        vs, cps = self.versions(), self.checkpoints()
-        heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-        proto = {"min_reader": 1, "min_writer": 1}
-        if not heads:
-            return proto
-        head = max(heads)
-        cached = self._protocol_cache
-        if cached is not None and cached[0] == head:
-            return dict(cached[1])
-        cp = max(cps, default=None)
-        if cp is not None:
-            doc = json.loads(
-                self._read_bytes(self._checkpoint_path(cp)).decode()
-            )
-            for k, w in (doc.get("protocol") or {}).items():
-                proto[k] = max(proto.get(k, 1), int(w))
-        for v in vs:
-            if cp is not None and v <= cp:
-                continue
-            for k, w in self._read_entry(v).get("protocol", {}).items():
-                proto[k] = max(proto.get(k, 1), int(w))
-        self._protocol_cache = (head, dict(proto))
-        return proto
-
-    def _state_at(
-        self, version: int | None = None
-    ) -> tuple[
-        list[dict], str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]
-    ]:
-        """Bounded-retry wrapper around :meth:`_state_at_once`: a
-        concurrent ``clean_log`` may delete a superseded checkpoint (or
-        its parquet sidecar) between our listing and our read;
-        re-listing then resolves through the newer checkpoint that
-        replaced it. DEADLINE-bounded, not attempt-bounded (round 9,
-        VERDICT r8 task #1: the 3-attempt budget was lapped under
-        full-suite 32-thread contention three rounds running — the
-        parquet sidecar read inside ``_state_at_once`` is a whole Spark
-        job, a race window that contention can stretch past any fixed
-        attempt count, while the deletion race itself stays
-        milliseconds wide). Unlike the distributed scan there is no
-        cheaper plan to degrade to, so deadline expiry re-raises."""
-        return _retry_missing(lambda: self._state_at_once(version))
-
-    def _meta_at(
-        self, version: int | None = None
-    ) -> tuple[str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]]:
-        """(schema json, txns, constraints, protocol, identity) WITHOUT
-        folding the add list: the checkpoint *document* carries every
-        metadata map, so no sidecar decode and no replay happen. This is
-        what the commit path (identity watermarks, constraints,
-        idempotency markers) and ``schema_at`` resolve through — on a
-        million-file table a metadata read must not cost O(files).
-        Same deadline-bounded retry contract as :meth:`_state_at` for
-        checkpoints deleted by a concurrent ``clean_log``."""
-        return _retry_missing(
-            lambda: self._state_at_once(version, with_adds=False)[1:]
-        )
-
-    def _state_at_once(
-        self, version: int | None = None, with_adds: bool = True
-    ) -> tuple[
-        list[dict], str | None, dict[str, int], dict[str, str], dict[str, int], dict[str, int]
-    ]:
-        """(live add-actions, schema json, txn→version map, constraint
-        name→expr map, protocol, identity watermarks) at ``version``:
-        nearest checkpoint ≤ version, then fold the entry tail. The
-        txn/constraint/protocol/identity maps ride the checkpoint so
-        :meth:`clean_log` never forgets an idempotency marker (a
-        replayed foreachBatch batch must stay a no-op even after its
-        entry is cleaned), an active CHECK constraint, a protocol
-        upgrade, or an allocated id range.
-
-        Raises :class:`ProtocolError` when the folded protocol demands a
-        reader newer than this implementation — enforced HERE, the one
-        choke point every snapshot/DML/CDF/maintenance consumer resolves
-        state through, so no code path can act on actions it might not
-        fully understand."""
-        vs = self.versions()
-        cps = self.checkpoints()
-        protocol = {"min_reader": 1, "min_writer": 1}
-        identity: dict[str, int] = {}
-        if version is None:
-            heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-            if not heads:
-                return [], None, {}, {}, protocol, identity
-            upto = max(heads)
-        else:
-            upto = version
-            if upto not in vs and upto not in cps:
-                raise ValueError(f"version {upto} not in log {vs} or checkpoints {cps}")
-        cp = max((c for c in cps if c <= upto), default=None)
-        if cp is not None:
-            # metadata-only resolution skips the sidecar decode entirely
-            doc = self._read_checkpoint(cp) if with_adds else self._checkpoint_doc(cp)
-            adds = doc["adds"] if with_adds else []
-            schema_json = doc.get("schema")
-            txns = dict(doc.get("txns", {}))
-            constraints = dict(doc.get("constraints", {}))
-            protocol = dict(doc.get("protocol", protocol))
-            identity = dict(doc.get("identity", {}))
-        else:
-            adds, schema_json, txns, constraints = [], None, {}, {}
-        entries = [self._read_entry(v) for v in vs if (cp is None or v > cp) and v <= upto]
-        for e in entries:
-            if "schema" in e:
-                schema_json = e["schema"]
-            if "txn" in e:
-                txns[e["txn"]] = e["version"]
-            constraints.update(e.get("set_constraints", {}))
-            for name in e.get("drop_constraints", []):
-                constraints.pop(name, None)
-            # protocol folds as a per-field MAX, never last-wins:
-            # requirements are monotone by construction (upgrade_protocol
-            # rejects downgrades), so an entry republished from stale
-            # state by a lost upgrade race can never roll back a gate a
-            # concurrent enable_column_mapping already raised
-            for k, w in e.get("protocol", {}).items():
-                protocol[k] = max(protocol.get(k, 1), int(w))
-            # watermarks fold as a MAX, never last-wins: a commit that
-            # only re-adds old rows (compaction) must not regress the
-            # high-water mark a later allocation depends on
-            for c, w in e.get("identity", {}).items():
-                identity[c] = max(identity.get(c, int(w)), int(w))
-        if protocol.get("min_reader", 1) > self.READER_VERSION:
-            raise ProtocolError(
-                f"{self.path} requires min_reader="
-                f"{protocol['min_reader']} but this client supports "
-                f"{self.READER_VERSION}; upgrade the client to read this table"
-            )
-        folded = replay_adds(entries, base=adds) if with_adds else []
-        return folded, schema_json, txns, constraints, protocol, identity
-
     def snapshot_adds(self, version: int | None = None) -> list[dict]:
         """Live add-actions (file + stats) at ``version`` (default latest)."""
-        return self._state_at(version)[0]
+        return self._log.snapshot_adds(version)
 
     def txn_versions(self) -> dict[str, int]:
         """txn id → version for every idempotent commit still visible
         (including those folded into a checkpoint by clean_log)."""
-        return self._meta_at(None)[1]
+        return self._log.meta()[1]
 
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints: name → SQL boolean expression."""
-        return self._meta_at(None)[2]
+        return self._log.meta()[2]
 
     def protocol(self) -> dict[str, int]:
         """The table's current protocol action (min_reader/min_writer);
         ``{"min_reader": 1, "min_writer": 1}`` when never upgraded."""
-        return self._meta_at(None)[3]
+        return self._log.meta()[3]
 
     def identity(self) -> dict[str, int]:
         """Identity columns: column → current high-water mark (the
         largest value any commit has allocated or observed)."""
-        return self._meta_at(None)[4]
+        return self._log.meta()[4]
 
     def set_identity(self, col: str, start: int = 1, max_retries: int = 5) -> int:
         """Declare ``col`` as the table's identity column (Delta's
@@ -1160,6 +1361,23 @@ class TxTable:
         here so the two kinds are indistinguishable downstream."""
         return add.get("path") or f"{self.path}/data/{add['file']}"
 
+    def _scan(
+        self, adds: list[dict], schema: T.StructType | None, positions: bool = False
+    ) -> DataFrame:
+        """Raw parquet scan of ``adds``' files under ``schema``'s PHYSICAL
+        names (column mapping; callers relabel). ``positions`` adds each
+        row's address — file name ``__f`` and ``__idx`` row index — the
+        keys deletion vectors and change-feed version tags join on."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(_phys_schema(schema))
+        df = reader.parquet(*[self._data_path(a) for a in adds])
+        if positions:
+            df = df.withColumn(
+                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+            ).withColumn("__idx", F.col("_metadata.row_index"))
+        return df
+
     def _read_adds(self, adds: list[dict], schema: T.StructType | None) -> DataFrame:
         """Scan a set of add-actions applying their deletion vectors —
         THE way every internal consumer (snapshot read, DML rewrite,
@@ -1172,16 +1390,11 @@ class TxTable:
         live in the log, so they are small by construction; large
         deletes take the rewrite path), so Spark broadcasts it and the
         scan stays one pass with no shuffle of the data side."""
-        reader = self.spark.read
-        if schema is not None:
-            # files are written under PHYSICAL names (column mapping);
-            # the logical relabel happens once at the end of this method
-            reader = reader.schema(_phys_schema(schema))
         plain = [a for a in adds if not a.get("dv")]
         dved = [a for a in adds if a.get("dv")]
         parts: list[DataFrame] = []
         if plain:
-            parts.append(reader.parquet(*[self._data_path(a) for a in plain]))
+            parts.append(self._scan(plain, schema))
         if dved:
             dv_rows = [
                 (a["file"], int(pos)) for a in dved for pos in a["dv"]
@@ -1189,14 +1402,7 @@ class TxTable:
             dv_df = self.spark.createDataFrame(
                 dv_rows, "__f string, __idx long"
             )
-            df = (
-                reader.parquet(*[self._data_path(a) for a in dved])
-                .withColumn(
-                    "__f",
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-                )
-                .withColumn("__idx", F.col("_metadata.row_index"))
-            )
+            df = self._scan(dved, schema, positions=True)
             cols = [c for c in df.columns if c not in ("__f", "__idx")]
             parts.append(
                 df.join(F.broadcast(dv_df), ["__f", "__idx"], "left_anti").select(*cols)
@@ -1216,33 +1422,17 @@ class TxTable:
 
     def schema_at(self, version: int | None = None) -> T.StructType | None:
         """Table schema at ``version``: the last recorded schema action.
-        Metadata-only resolution (:meth:`_meta_at`) — never decodes the
-        checkpoint add-list sidecar just to read a schema string."""
-        schema_json = self._meta_at(version)[0]
-        return None if schema_json is None else T.StructType.fromJson(json.loads(schema_json))
+        Metadata-only resolution — never decodes the checkpoint
+        add-list sidecar just to read a schema string."""
+        return self._log.schema_at(version)
 
     def commit_time_ms(self, version: int) -> int:
-        """Wall-clock commit time of ``version``. Entries published
-        before timestamps existed fall back to the log file's
-        modification time (what Delta does for its checkpoint-era
-        entries) — monotone enough for time travel, and exact for every
-        entry written since."""
-        e = self._read_entry(version)
-        if "ts_ms" in e:
-            return int(e["ts_ms"])
-        return int(self._fs.getFileStatus(self._log_path(version)).getModificationTime())
+        """Wall-clock commit time of ``version`` (see :meth:`LogReader.commit_time_ms`)."""
+        return self._log.commit_time_ms(version)
 
     def version_at_time(self, ts_ms: int) -> int:
-        """Newest version whose commit time is <= ``ts_ms`` —
-        ``TIMESTAMP AS OF`` resolution. Raises if the table didn't exist
-        yet at that time (or its early history was cleaned)."""
-        candidates = [v for v in self.versions() if self.commit_time_ms(v) <= ts_ms]
-        if not candidates:
-            raise ValueError(
-                f"no commit at or before ts_ms={ts_ms} under {self.path} "
-                "(table younger than that, or history cleaned past it)"
-            )
-        return max(candidates)
+        """``TIMESTAMP AS OF`` resolution (see :meth:`LogReader.version_at_time`)."""
+        return self._log.version_at_time(ts_ms)
 
     def read(
         self,
@@ -1307,12 +1497,6 @@ class TxTable:
         kept = [a["file"] for a in adds if file_matches(a, preds)]
         return {"total": len(adds), "scanned": len(kept), "files": kept}
 
-    def _checkpoint_doc(self, version: int) -> dict:
-        """Checkpoint JSON document WITHOUT decoding the parquet add-list
-        sidecar — the doc itself stays O(schema + txns + protocol) no
-        matter how many files the table holds."""
-        return json.loads(self._read_bytes(self._checkpoint_path(version)).decode())
-
     def scan_adds_distributed(
         self, where: list[tuple], version: int | None = None
     ) -> list[dict] | None:
@@ -1326,7 +1510,7 @@ class TxTable:
         self, where: list[tuple], version: int | None = None
     ) -> tuple[list[dict], T.StructType | None] | None:
         """Bounded-retry wrapper around :meth:`_scan_distributed_once` —
-        the :meth:`_state_at` contract, but with MORE attempts: a
+        the :meth:`LogReader.state` contract, but with MORE attempts: a
         concurrent ``clean_log`` may delete a superseded checkpoint doc,
         a tail entry, or the parquet sidecar between our listing and any
         of the reads, and unlike the driver-side reads the sidecar scan
@@ -1373,25 +1557,15 @@ class TxTable:
         cost more than the driver fold — the caller then takes the
         driver path, which IS the right plan for those shapes.
         """
-        vs, cps = self.versions(), self.checkpoints()
-        if version is None:
-            heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-            if not heads:
-                return None
-            upto = max(heads)
-        else:
-            upto = version
-            if upto not in vs and upto not in cps:
-                # same contract as _state_at: an unknown version is an
-                # error, not a silent resolve-to-latest
-                raise ValueError(f"version {upto} not in log {vs} or checkpoints {cps}")
+        vs, cps = self._log.listing()
+        upto = _resolve(vs, cps, version)
         cp = max((c for c in cps if c <= upto), default=None)
         if cp is None:
             return None
-        doc = self._checkpoint_doc(cp)
+        doc = self._log.checkpoint_doc(cp)
         if not doc.get("adds_parquet"):
             return None
-        entries = [self._read_entry(v) for v in vs if v > cp and v <= upto]
+        entries = [self._log.read_entry(v) for v in vs if v > cp and v <= upto]
         if any(e["mode"] == "overwrite" for e in entries):
             return None
         # schema resolves from the doc + tail (no add fold needed)
@@ -1488,7 +1662,7 @@ class TxTable:
         }
 
     def history(self) -> list[dict]:
-        return [self._read_entry(v) for v in self.versions()]
+        return [self._log.read_entry(v) for v in self.versions()]
 
     def describe_history(self) -> list[dict]:
         """DESCRIBE HISTORY: newest-first operation summary per commit —
@@ -1497,7 +1671,7 @@ class TxTable:
         O(retained log entries), no data files touched."""
         out = []
         for v in sorted(self.versions(), reverse=True):
-            e = self._read_entry(v)
+            e = self._log.read_entry(v)
             default = "WRITE" if e["mode"] == "append" else "OVERWRITE"
             out.append(
                 {
@@ -1737,13 +1911,7 @@ class TxTable:
         ]
         if not todo:
             return latest
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(_phys_schema(schema))
-        stats = self._file_stats(
-            reader.parquet(*[self._data_path(a) for a in todo]),
-            [pm.get(c, c) for c in wanted],
-        )
+        stats = self._file_stats(self._scan(todo, schema), [pm.get(c, c) for c in wanted])
         set_stats = {a["file"]: stats[a["file"]] for a in todo if a["file"] in stats}
         for _ in range(max_retries):
             entry = {
@@ -1922,7 +2090,7 @@ class TxTable:
         # test under full-suite load).
         id_base = self.latest_version()
         identity = (
-            self._meta_at(id_base)[4] if id_base is not None else {}
+            self._log.meta(id_base)[4] if id_base is not None else {}
         )
         id_assigned = False
         if identity:
@@ -1986,20 +2154,18 @@ class TxTable:
             # claims a fresh slot with an unchecked conflict (identity
             # collision / missed remove-remove; caught by the identity
             # chaos test under load).
-            vs = self.versions()
-            cps = self.checkpoints()
-            heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
-            latest = max(heads) if heads else None
+            vs, cps = self._log.listing()
+            latest = _head(vs, cps)
             version = latest + 1 if latest is not None else 0
             if remove_set or dv_set:
-                interleaved = [self._read_entry(v) for v in vs if v > base_version]
+                interleaved = [self._log.read_entry(v) for v in vs if v > base_version]
                 why = self._logical_conflict(interleaved, remove_set | dv_set)
                 if why is not None:
                     discard()
                     raise CommitConflict(f"{self.path}: {why}")
             if id_assigned:
                 rivals = [
-                    self._read_entry(v)
+                    self._log.read_entry(v)
                     for v in vs
                     if id_base is None or v > id_base
                 ]
@@ -2054,14 +2220,15 @@ class TxTable:
         every row added or removed by each commit in the range, tagged
         ``_change_type`` (``insert``/``delete``) and ``_commit_version``.
 
-        Derivation is purely log-based — a commit's ``add`` files are its
-        inserts and its ``remove`` files are its deletes (an overwrite
-        deletes the whole previous snapshot), so the cost is O(changed
-        files), never a snapshot diff: at 100 TB a 1 GB merge yields a
-        1–2 GB change feed read, not two 100 TB scans joined. MERGE
-        surfaces as delete+insert of the rewritten files' rows (the
-        stats-scoped rewrite keeps that set small); this is the
-        file-granular feed Delta emits when its CDF column is off.
+        Derivation is purely log-based (:func:`plan_changes`) — a
+        commit's ``add`` files are its inserts and its ``remove`` files
+        are its deletes (an overwrite deletes the whole previous
+        snapshot), so the cost is O(changed files), never a snapshot
+        diff: at 100 TB a 1 GB merge yields a 1–2 GB change feed read,
+        not two 100 TB scans joined. MERGE surfaces as delete+insert of
+        the rewritten files' rows (the stats-scoped rewrite keeps that
+        set small); this is the file-granular feed Delta emits when its
+        CDF column is off.
 
         Requires the range's log entries (``clean_log`` horizon) and the
         removed files (``vacuum`` horizon) to still exist; raises
@@ -2071,182 +2238,101 @@ class TxTable:
         if latest is None:
             raise FileNotFoundError(f"no committed data under {self.path}")
         upto = latest if to_version is None else to_version
-        want = [v for v in range(from_version + 1, upto + 1)]
         have = set(self.versions())
-        missing = [v for v in want if v not in have]
+        missing = [v for v in range(from_version + 1, upto + 1) if v not in have]
         if missing:
             raise ValueError(
                 f"log entries {missing} no longer exist (clean_log horizon); "
                 "change feed unavailable below the retained tail"
             )
-        parts: list[DataFrame] = []
+        df = self._read_units(plan_changes(self._log, from_version, upto), from_version)
+        if df is not None:
+            return df
+        schema = self.schema_at(upto)
+        if schema is None:
+            raise FileNotFoundError(f"no committed data under {self.path}")
+        out = T.StructType(
+            schema.fields
+            + [T.StructField("_change_type", T.StringType()),
+               T.StructField("_commit_version", T.IntegerType())]
+        )
+        return self.spark.createDataFrame([], out)
 
-        def _check_exists(adds: list[dict], v: int) -> None:
-            for a in adds:
-                if not self._fs.exists(self._jpath(self._data_path(a))):
-                    raise FileNotFoundError(
-                        f"{a['file']} was vacuumed; change feed for version {v} unavailable"
-                    )
-
-        def _part(adds: list[dict], schema_v: int | None, ctype: str, v: int) -> None:
-            if not adds:
-                return
-            _check_exists(adds, v)
-            schema = self.schema_at(schema_v) if schema_v is not None and schema_v >= 0 else None
-            # _read_adds applies each add's deletion vector, so a
-            # rewrite's delete-side never re-reports already-DV'd rows
-            parts.append(
-                self._read_adds(adds, schema)
-                .withColumn("_change_type", F.lit(ctype))
-                .withColumn("_commit_version", F.lit(v))
-            )
-
-        def _dv_part(set_dv: dict[str, list[int]], prior: dict[str, dict], v: int) -> None:
-            """A set_dv action's row-level feed: the newly-vectored
-            positions of each file surface as delete rows."""
-            adds = [prior.get(f, {"file": f}) for f in set_dv]
-            _check_exists(adds, v)
-            schema = self.schema_at(v - 1) if v > 0 else None
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(_phys_schema(schema))
-            dv_rows = [(f, int(p)) for f, ps in set_dv.items() for p in ps]
-            df = (
-                reader.parquet(*[self._data_path(a) for a in adds])
-                .withColumn(
-                    "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-                )
-                .withColumn("__idx", F.col("_metadata.row_index"))
-            )
-            hit = df.join(
-                F.broadcast(
-                    self.spark.createDataFrame(dv_rows, "__f string, __idx long")
-                ),
-                ["__f", "__idx"],
-                "inner",
-            )
-            if _is_mapped(schema):
-                hit = hit.select(
-                    *[F.col(_phys_name(f)).alias(f.name) for f in schema.fields]
-                )
-            else:
-                hit = hit.select(*[c for c in df.columns if c not in ("__f", "__idx")])
-            parts.append(
-                hit.withColumn("_change_type", F.lit("delete"))
-                .withColumn("_commit_version", F.lit(v))
-            )
-
-        # Round 12 (guide §5 driver costs + §2 shuffle-breadth): two
-        # O(window) inefficiencies removed with identical output rows.
-        # (1) The prior-snapshot fold (a full checkpoint+tail replay) is
-        #     now computed ONLY for commits that remove/overwrite/DV —
-        #     it was built per version, making a pure-append window cost
-        #     O(window × log length) driver CPU for nothing.
-        # (2) Insert rows are planned as ONE multi-path scan per schema
-        #     epoch instead of one scan branch per commit: the
-        #     _commit_version tag rides a broadcast (file → version)
-        #     join on the scan's _metadata file name. A 1000-commit CDF
-        #     window is one scan + one broadcast hash join, not a
-        #     1000-branch union the driver must plan and schedule.
-        #     Entry add-actions never carry DVs (vectors arrive in later
-        #     set_dv actions and the delete side reports those), so the
-        #     plain-scan path is always valid for inserts; any add that
-        #     nonetheless carried one would fall back to the per-version
-        #     part, keeping semantics over speed.
-        ins_groups: dict[str | None, list[tuple[int, dict]]] = {}
-        cur_sj: str | None = self._meta_at(want[0])[0] if want else None
-        for v in want:
-            e = self._read_entry(v)
-            if v != want[0] and "schema" in e:
-                cur_sj = e["schema"]
-            need_prior = v > 0 and (
-                e["mode"] == "overwrite" or e.get("remove") or e.get("set_dv")
-            )
-            prior = (
-                {a["file"]: a for a in self.snapshot_adds(v - 1)}
-                if need_prior
-                else {}
-            )
-            if e["mode"] == "overwrite":
-                _part(list(prior.values()), v - 1, "delete", v)
-            else:
-                # remove lists carry names; resolve each to its full add
-                # action (a cloned add's file lives under ANOTHER table)
-                _part(
-                    [prior.get(f, {"file": f}) for f in e.get("remove", [])],
-                    v - 1,
-                    "delete",
-                    v,
-                )
-                if e.get("set_dv"):
-                    _dv_part(e["set_dv"], prior, v)
-            for a in e.get("add", []):
-                if a.get("dv"):
-                    _part([a], v, "insert", v)  # defensive; see above
-                else:
-                    ins_groups.setdefault(cur_sj, []).append((v, a))
-        for sj, items in ins_groups.items():
-            versions = {v for v, _ in items}
-            if len(versions) == 1:
-                # single-commit group (the steady-state CDC tick): a
-                # literal tag, no broadcast map — byte-identical plan to
-                # the old per-version part
-                v0 = next(iter(versions))
-                adds = [a for _, a in items]
-                _check_exists(adds, v0)
-                schema = (
-                    None if sj is None else T.StructType.fromJson(json.loads(sj))
-                )
-                parts.append(
-                    self._read_adds(adds, schema)
-                    .withColumn("_change_type", F.lit("insert"))
-                    .withColumn("_commit_version", F.lit(v0))
-                )
-                continue
-            adds = [a for _, a in items]
-            _check_exists(adds, items[0][0])
-            schema = (
-                None if sj is None else T.StructType.fromJson(json.loads(sj))
-            )
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(_phys_schema(schema))
-            vmap = self.spark.createDataFrame(
-                [(a["file"], int(v)) for v, a in items], "__f string, __v int"
-            )
-            df = (
-                reader.parquet(*[self._data_path(a) for a in adds])
-                .withColumn(
-                    "__f",
-                    F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-                )
-                .join(F.broadcast(vmap), "__f")
-            )
-            if _is_mapped(schema):
-                cols = [F.col(_phys_name(f)).alias(f.name) for f in schema.fields]
-            else:
-                cols = [F.col(c) for c in df.columns if c not in ("__f", "__v")]
-            parts.append(
-                df.select(
-                    *cols,
-                    F.lit("insert").alias("_change_type"),
-                    F.col("__v").alias("_commit_version"),
-                )
-            )
-        if not parts:
-            schema = self.schema_at(upto)
-            if schema is None:
-                raise FileNotFoundError(f"no committed data under {self.path}")
-            out = T.StructType(
-                schema.fields
-                + [T.StructField("_change_type", T.StringType()),
-                   T.StructField("_commit_version", T.IntegerType())]
-            )
-            return self.spark.createDataFrame([], out)
+    def _read_units(self, units: list[ChangeUnit], from_version: int) -> DataFrame | None:
+        """Rows of change units (None when there are none), tagged
+        ``_change_type`` and ``_commit_version``. Units are grouped by
+        the schema their files are read with (a delete reads the
+        snapshot before its commit, an insert the one after), change
+        type and DV mode; each group is ONE parquet scan that reads each
+        distinct file once. A group from one commit carries literal tags
+        (the steady-state CDC tick); a group spanning commits tags rows
+        through a broadcast ``(file, version)`` join, which also fans a
+        file added at several versions (RESTORE) out to each of them."""
+        if not units:
+            return None
+        # schema json live at each version the units read at
+        sj = {from_version: self._log.meta(from_version)[0] if from_version >= 0 else None}
+        for v in range(from_version + 1, max(u.version for u in units) + 1):
+            sj[v] = self._log.read_entry(v).get("schema", sj[v - 1])
+        groups: dict[tuple, list[ChangeUnit]] = {}
+        for u in units:
+            at = u.version - 1 if u.change_type == "delete" else u.version
+            groups.setdefault((sj[at], u.change_type, u.dv_mode), []).append(u)
+        parts = [
+            self._scan_units(us, None if j is None else T.StructType.fromJson(json.loads(j)))
+            for (j, _, _), us in groups.items()
+        ]
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p, allowMissingColumns=True)
         return df
+
+    def _scan_units(self, units: list[ChangeUnit], schema: T.StructType | None) -> DataFrame:
+        """One scan of a group of change units sharing schema, change
+        type and DV mode (see :meth:`_read_units`)."""
+        ctype, dv_mode = units[0].change_type, units[0].dv_mode
+        first: dict[str, int] = {}
+        adds: dict[str, dict] = {}
+        for u in units:
+            adds.setdefault(u.add["file"], u.add)
+            first.setdefault(u.add["file"], u.version)
+        for name, a in adds.items():
+            if not self._exists(self._data_path(a)):
+                raise FileNotFoundError(
+                    f"{name} was vacuumed; change feed for version {first[name]} unavailable"
+                )
+        versions = {u.version for u in units}
+        if dv_mode == "exclude" and len(versions) == 1:
+            # one commit: literal tags; _read_adds applies each add's DV,
+            # so a rewrite's delete side never re-reports DV'd rows
+            return (
+                self._read_adds(list(adds.values()), schema)
+                .withColumn("_change_type", F.lit(ctype))
+                .withColumn("_commit_version", F.lit(versions.pop()))
+            )
+        dvs = [(u.add["file"], u.version, int(p)) for u in units for p in u.dv]
+        df = self._scan(list(adds.values()), schema, positions=True)
+        if dvs or dv_mode == "only":
+            dv_df = F.broadcast(
+                self.spark.createDataFrame(dvs, "__f string, __v int, __idx long")
+            )
+        if dv_mode == "only":
+            # a set_dv action's delete rows: exactly its positions
+            df = df.join(dv_df, ["__f", "__idx"])
+        else:
+            vmap = self.spark.createDataFrame(
+                sorted({(u.add["file"], u.version) for u in units}), "__f string, __v int"
+            )
+            df = df.join(F.broadcast(vmap), "__f")
+            if dvs:
+                df = df.join(dv_df, ["__f", "__v", "__idx"], "left_anti")
+        if _is_mapped(schema):
+            cols = [F.col(_phys_name(f)).alias(f.name) for f in schema.fields]
+        else:
+            cols = [F.col(c) for c in df.columns if c not in ("__f", "__v", "__idx")]
+        return df.select(
+            *cols, F.lit(ctype).alias("_change_type"), F.col("__v").alias("_commit_version")
+        )
 
     def read_incremental(
         self, last_version: int | None = None, ignore_changes: bool = False
@@ -2257,41 +2343,21 @@ class TxTable:
         :meth:`commit`'s ``txn`` on the sink side for exactly-once
         end-to-end). Returns ``(None, last_version)`` when nothing new.
 
-        Append-only by contract: an interleaved remove or overwrite means
-        added-files-only is NOT the row-level delta, so it raises unless
-        ``ignore_changes=True`` (then rewritten files' rows re-deliver,
-        Delta's ``ignoreChanges`` semantics — consumers must be
-        idempotent on re-delivery).
+        Append-only by contract (:func:`appended_units`): a commit that
+        deletes rows raises unless ``ignore_changes=True``. The rows are
+        the change feed's inserts over the same window.
         """
         last = -1 if last_version is None else last_version
         latest = self.latest_version()
         if latest is None or latest <= last:
             return None, last
-        add_files: list[str] = []
-        for v in range(last + 1, latest + 1):
-            e = self._read_entry(v)
-            if not ignore_changes and (
-                e["mode"] == "overwrite" or e.get("remove") or e.get("set_dv")
-            ):
-                raise ValueError(
-                    f"version {v} is not append-only (mode={e['mode']}, "
-                    f"{len(e.get('remove', []))} removes, "
-                    f"{len(e.get('set_dv') or {})} deletion vectors); pass "
-                    "ignore_changes=True to re-deliver rewritten rows"
-                )
-            add_files.extend(e.get("add", []))
-        if not add_files:
-            return None, latest
-        schema = self.schema_at(latest)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(_phys_schema(schema))
-        out = reader.parquet(*[self._data_path(a) for a in add_files])
-        if _is_mapped(schema):
-            out = out.select(
-                *[F.col(_phys_name(f)).alias(f.name) for f in schema.fields]
-            )
-        return out, latest
+        inserts = appended_units(
+            plan_changes(self._log, last, latest),
+            ignore_changes,
+            "pass ignore_changes=True to re-deliver rewritten rows",
+        )
+        df = self._read_units(inserts, last)
+        return (None if df is None else df.drop("_change_type", "_commit_version")), latest
 
     # -- table services ----------------------------------------------------
     def merge(
@@ -2539,16 +2605,10 @@ class TxTable:
         DV are excluded (re-deleting them would be harmless by union,
         but their count would double-trigger the fallback)."""
         schema = self.schema_at(base)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(_phys_schema(schema))
         scan = (
-            reader.parquet(*[self._data_path(a) for a in touched])
+            self._scan(touched, schema, positions=True)
             .filter(_pred_column(_phys_where(where, schema)).eqNullSafe(F.lit(True)))
-            .select(
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__f"),
-                F.col("_metadata.row_index").alias("__idx"),
-            )
+            .select("__f", "__idx")
         )
         existing = [
             (a["file"], int(pos)) for a in touched for pos in a.get("dv", [])
@@ -2577,17 +2637,15 @@ class TxTable:
             # one listing for slot AND window (see commit(): a rival in
             # a two-listing gap can dodge the conflict check); the slot
             # still honors checkpoint heads (post-clean_log tails)
-            vs = self.versions()
-            cps = self.checkpoints()
-            heads = ([vs[-1]] if vs else []) + ([cps[-1]] if cps else [])
+            vs, cps = self._log.listing()
             entry = {
-                "version": (max(heads) if heads else 0) + 1,
+                "version": (_head(vs, cps) or 0) + 1,
                 "mode": "append",
                 "add": [],
                 "set_dv": {f: sorted(ps) for f, ps in set_dv.items()},
                 "op": "DELETE (DV)",
             }
-            interleaved = [self._read_entry(v) for v in vs if v > base]
+            interleaved = [self._log.read_entry(v) for v in vs if v > base]
             why = self._dv_conflict(interleaved, set(set_dv))
             if why is not None:
                 raise CommitConflict(f"{self.path}: {why}")
@@ -2692,16 +2750,8 @@ class TxTable:
         atomic entry, no touched-file rewrite. Returns None above
         :attr:`dv_max_rows` (take the rewrite)."""
         schema = self.schema_at(base)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(_phys_schema(schema))
-        scan = (
-            reader.parquet(*[self._data_path(a) for a in touched])
-            .withColumn(
-                "__f", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            )
-            .withColumn("__idx", F.col("_metadata.row_index"))
-            .filter(_pred_column(_phys_where(where, schema)).eqNullSafe(F.lit(True)))
+        scan = self._scan(touched, schema, positions=True).filter(
+            _pred_column(_phys_where(where, schema)).eqNullSafe(F.lit(True))
         )
         existing = [(a["file"], int(p)) for a in touched for p in a.get("dv", [])]
         if existing:
@@ -2838,11 +2888,11 @@ class TxTable:
         if tgt.latest_version() is not None:
             raise ValueError(f"clone target {target_path} is already a table")
         adds = self.snapshot_adds(version)
-        schema_json = self._meta_at(version)[0]  # no second add fold
+        schema_json = self._log.meta(version)[0]  # no second add fold
         cloned = []
         for a in adds:
             src = self._data_path(a)
-            if not self._fs.exists(self._jpath(src)):
+            if not self._exists(src):
                 raise FileNotFoundError(f"{a['file']} was vacuumed; clone impossible")
             if deep:
                 dst = f"{tgt.path}/data/{a['file']}"
@@ -2879,9 +2929,9 @@ class TxTable:
         is published.
         """
         old_adds = self.snapshot_adds(version)
-        schema_json = self._meta_at(version)[0]  # no second add fold
+        schema_json = self._log.meta(version)[0]  # no second add fold
         for a in old_adds:
-            if not self._fs.exists(self._jpath(self._data_path(a))):
+            if not self._exists(self._data_path(a)):
                 raise FileNotFoundError(
                     f"{a['file']} from version {version} was vacuumed; restore impossible"
                 )
@@ -3260,7 +3310,7 @@ class TxTable:
         missing = [
             a["file"]
             for a in self.snapshot_adds()
-            if not self._fs.exists(self._jpath(self._data_path(a)))
+            if not self._exists(self._data_path(a))
         ]
         if repair and missing:
 
@@ -3292,7 +3342,7 @@ class TxTable:
         # checkpoints are resolvable snapshots too (after clean_log they
         # may be the ONLY resolvable form of the tail) — their files are
         # as live as any entry's
-        resolvable = sorted(set(self.versions()) | set(self.checkpoints()))
+        resolvable = sorted(set().union(*self._log.listing()))
         keep: set[str] = set()
         for v in resolvable:
             if v >= keep_from_version:

@@ -30,7 +30,7 @@ def test_released_lazy_plan_still_computes(spark):
 
 
 def test_graph_and_lm_operators_register_their_persists(spark):
-    from novlake_spark.operators.graph import pagerank_int, release_persists
+    from novlake_spark.operators.graph import pagerank_int
     from novlake_spark.operators.lm import kn_perplexity_scores
 
     e = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "a long, b long")
@@ -39,5 +39,5 @@ def test_graph_and_lm_operators_register_their_persists(spark):
         [(1, "a b a c"), (2, "b c a b")], "doc_id long, text string"
     )
     kn_perplexity_scores(docs).count()
-    assert release_persists() >= 3  # sym + out (graph) and doc_bg (lm)
-    assert release_persists() == 0
+    assert release_tracked() >= 3  # sym + out (graph) and doc_bg (lm)
+    assert release_tracked() == 0

@@ -2,10 +2,13 @@
 (novlake_spark.txlog) and incremental materialized aggregate views
 (novlake_spark.mview)."""
 
+from collections import Counter
+
 import pytest
 import pyspark.sql.functions as F
 
 from novlake_spark.mview import IncrementalAggView
+from novlake_spark.sources.txlog_source import register_txlog_source
 from novlake_spark.txlog import TxTable
 
 
@@ -75,6 +78,47 @@ def test_changes_after_vacuum_raises(spark, tmp_path):
     assert t.changes(cv).count() == 0  # empty range, schema intact
     t.commit(_df(spark, (9, 90)))
     assert _changes(t, cv) == [(9, 90, "insert", cv + 1)]
+
+
+def test_changes_over_restore_count_each_file_once(spark, tmp_path):
+    """insert, insert, overwrite, restore(1): the restore re-adds both
+    inserts' files, so the window (0, 3] holds v1's files at two
+    versions. Batch and stream feeds must deliver them once per version
+    (insert@1 = 2 rows, insert@3 = 4) — not re-read each file per
+    version that added it and then fan every copy out to every version."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.commit(_df(spark, (0, 0), (1, 10)))
+    t.commit(_df(spark, (2, 20), (3, 30)))
+    t.commit(_df(spark, (9, 90)), mode="overwrite")
+    t.restore(1)
+    want = {
+        ("insert", 1): 2,
+        ("delete", 2): 4,
+        ("insert", 2): 1,
+        ("delete", 3): 1,
+        ("insert", 3): 4,
+    }
+    batch = Counter((r._change_type, r._commit_version) for r in t.changes(0).collect())
+    assert batch == want
+    register_txlog_source(spark)
+    out = str(tmp_path / "out")
+    (
+        spark.readStream.format("txlog")
+        .option("path", t.path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", "1")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    stream = Counter(
+        (r._change_type, r._commit_version) for r in spark.read.parquet(out).collect()
+    )
+    assert stream == want
 
 
 # ---------------------------------------------------------- read_incremental
@@ -239,7 +283,7 @@ def test_mview_scopes_rewrite_to_overlapping_files(spark, tmp_path):
         spark.range(10_000, 10_050).select(F.col("id").alias("k"), F.lit(5).alias("v"))
     )
     ventry = view.refresh()
-    entry = view.view._read_entry(ventry)
+    entry = view.view._log.read_entry(ventry)
     # low-range file(s) survived untouched
     assert set(entry["remove"]) < files_before or not entry["remove"]
     survivors = files_before - set(entry["remove"])

@@ -4,8 +4,8 @@ logical names on the API surface, protocol-gated."""
 
 import pytest
 
-from novlake_spark.sources.txlog_source import _PyLog, register_txlog_source
-from novlake_spark.txlog import TxTable
+from novlake_spark.sources.txlog_source import register_txlog_source
+from novlake_spark.txlog import LogReader, TxTable
 
 
 def _kv(spark, lo, hi):
@@ -146,7 +146,7 @@ def test_python_source_reads_mapped_table(spark, tmp_path):
             .mode("append")
             .save()
         )
-    assert _PyLog(str(tmp_path / "t")).full_state()  # still resolvable
+    assert LogReader(str(tmp_path / "t")).state()  # still resolvable
 
 
 def test_stream_source_reads_mapped_table(spark, tmp_path):

@@ -4,8 +4,7 @@ allocation-race conflicts."""
 
 import pytest
 
-from novlake_spark.sources.txlog_source import _PyLog
-from novlake_spark.txlog import CommitConflict, TxTable
+from novlake_spark.txlog import CommitConflict, LogReader, TxTable
 
 
 def _df(spark, *vals):
@@ -103,7 +102,7 @@ def test_python_writer_refuses_identity_tables(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     t.set_identity("id")
     t.commit(_df(spark, 1))
-    assert _PyLog(str(tmp_path / "t")).full_state()[5] == t.identity()
+    assert LogReader(str(tmp_path / "t")).state()[5] == t.identity()
     # the format("txlog") batch writer surfaces the refusal (allocation
     # and watermark advance live in TxTable.commit only)
     from novlake_spark.sources.txlog_source import register_txlog_source

@@ -1,8 +1,8 @@
 """Property test: arbitrary interleavings of JVM (TxTable) and Python
 (data-source) writers against ONE transaction log must agree on every
 snapshot — same versions, same file sets, same rows — and the two
-planners (``TxTable._state_at`` and ``_PyLog.full_state``) must never
-diverge. This is the invariant the whole dual-writer design rests on:
+log seams (``os``, which TxTable uses on local paths, and Hadoop over
+py4j) must never diverge. This is the invariant the whole dual-writer design rests on:
 both sides claim version slots with an atomic create-if-absent on the
 same directory entry, so any interleaving is equivalent to SOME serial
 order."""
@@ -12,8 +12,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from novlake_spark.sources.txlog_source import _PyLog, _TxLogBatchWriter
-from novlake_spark.txlog import TxTable
+from novlake_spark.sources.txlog_source import _TxLogBatchWriter
+from novlake_spark.txlog import LogReader, TxTable, _HadoopFS
 
 # an op is ("jvm"|"py", lo, hi): append rows k in [lo, hi) from that writer
 _ops = st.lists(
@@ -69,11 +69,11 @@ def test_mixed_writer_interleavings_agree(spark, tmp_path_factory, ops):
         expect += [(k, k * 10) for k in range(lo, hi)]
     # one log entry per op, contiguous versions, no lost or phantom commit
     assert t.versions() == list(range(len(ops) + 1))
-    # both planners resolve the identical snapshot at EVERY version
-    py = _PyLog(path)
+    # both seams resolve the identical snapshot at EVERY version
+    jvm = LogReader(path, _HadoopFS(spark, path))
     for v in t.versions():
-        assert sorted(py.snapshot_files(v)) == sorted(t.snapshot_files(v))
-    assert py.schema_at() == t.schema_at()
+        assert jvm.snapshot_adds(v) == t.snapshot_adds(v)
+    assert jvm.schema_at() == t.schema_at()
     # and the rows are exactly the union of all appends
     got = sorted((r.k, r.v) for r in t.read().collect())
     assert got == sorted(expect)
@@ -159,7 +159,6 @@ def test_chaos_mixed_dml_under_concurrency(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from novlake_spark.sources.txlog_source import _PyLog
     from novlake_spark.txlog import CommitConflict
 
     path = str(tmp_path / "t")
@@ -210,9 +209,9 @@ def test_chaos_mixed_dml_under_concurrency(spark, tmp_path):
     # contiguous log, exactly one entry per successful commit
     assert versions == list(range(len(versions)))
     assert len(versions) == 1 + len(successes)
-    # every retained snapshot resolves identically in both planners and
-    # the latest is readable end-to-end
-    py = _PyLog(path)
+    # every retained snapshot resolves identically through both seams
+    # and the latest is readable end-to-end
+    jvm = LogReader(path, _HadoopFS(spark, path))
     for v in versions:
-        assert sorted(py.snapshot_files(v)) == sorted(t.snapshot_files(v))
+        assert jvm.snapshot_adds(v) == t.snapshot_adds(v)
     assert t.read().count() > 0

@@ -5,6 +5,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from novlake_spark import cache, plans
+from novlake_spark.inventory.joins import q_join_star
+from novlake_spark.inventory.projection import q_topk_global
+from novlake_spark.sources.tables import load_table
 
 
 @pytest.fixture(autouse=True)
@@ -18,9 +21,6 @@ def _fresh_cache_state(spark):
     cache.release_tracked()
     spark.catalog.clearCache()
     yield
-from novlake_spark.inventory.joins import q_join_star
-from novlake_spark.inventory.projection import q_topk_global
-from novlake_spark.sources.tables import load_table
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_small):
@@ -345,3 +345,22 @@ def test_archive_build_width_not_coalescible(spark, sf_small):
     # explicit repartition itself (no ENSURE_REQUIREMENTS re-shuffle
     # of the bucket key on top of it)
     assert plan.count("hashpartitioning(bucket") == 1, plan
+
+
+def test_change_feed_window_scan_shapes(spark, tmp_path):
+    """A multi-commit change-feed window reads its inserted files in ONE
+    parquet scan and tags each row's commit through a BroadcastHashJoin
+    on (file, version); a one-commit window is a single scan with a
+    literal tag — no join."""
+    import re
+
+    from novlake_spark.txlog import TxTable
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    for lo in range(0, 30, 10):
+        t.commit(spark.range(lo, lo + 10).selectExpr("id AS k"))
+    scans = re.compile(r"Scan parquet\s+\(\d+\)")
+    multi = plans.explain_str(t.changes(-1))
+    assert len(scans.findall(multi)) == 1 and "BroadcastHashJoin" in multi, multi
+    single = plans.explain_str(t.changes(1))
+    assert len(scans.findall(single)) == 1 and "BroadcastHashJoin" not in single, single

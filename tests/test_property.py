@@ -5,7 +5,7 @@ definition on arbitrary inputs, and JSON round-trips are lossless."""
 import datetime as dt
 
 import pyspark.sql.functions as F
-from hypothesis import given, settings, strategies as st
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from novlake_spark.operators.asof import asof_join
 
@@ -414,3 +414,86 @@ def test_topk_final_order_equals_bruteforce(data, kk, seed):
     want = np.lexsort((np.broadcast_to(b_ids, sims.shape), -rounded), axis=1)[:, :kk]
     got = K._topk_final_order(sims.copy(), b_ids, kk)
     assert np.array_equal(got, want)
+
+
+# --- change feed folds snapshots forward: batch and stream --------------
+
+_table_ops = st.lists(
+    st.tuples(
+        st.sampled_from(
+            ["append", "overwrite", "merge", "delete", "delete_dv", "update", "restore"]
+        ),
+        st.integers(0, 9),
+    ),
+    min_size=1,
+    max_size=5,
+)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(ops=_table_ops, data=st.data())
+def test_change_feed_folds_snapshot_forward(tmp_path_factory, ops, data):
+    """For any history of append / overwrite / MERGE / plain and DV
+    DELETE / UPDATE / RESTORE and any window ``(a, b]``:
+    ``snapshot(a) ⊎ inserts == snapshot(b) ⊎ deletes`` as multisets —
+    for ``TxTable.changes`` and for the streaming source's micro-batch
+    (its planning and executor hooks, called directly)."""
+    from collections import Counter
+
+    from novlake_spark.sources.txlog_source import TxLogDataSource
+    from novlake_spark.txlog import TxTable
+
+    t = TxTable(_spark, str(tmp_path_factory.mktemp("cdf") / "t"))
+
+    def rows(lo, n, tag):
+        return _spark.createDataFrame(
+            [(k, k * 10 + tag) for k in range(lo, lo + n)], "k long, v long"
+        ).coalesce(1)
+
+    t.commit(rows(0, 4, 0))
+    for step, (op, x) in enumerate(ops, start=1):
+        if op == "append":
+            t.commit(rows(x, 2, step))
+        elif op == "overwrite":
+            t.commit(rows(x, 3, step), mode="overwrite")
+        elif op == "merge":
+            t.merge(rows(x, 2, step), key=["k"])
+        elif op in ("delete", "delete_dv"):
+            t.delete([("k", "=", x)], dv=op == "delete_dv")
+        elif op == "update":
+            t.update({"v": "v + 1"}, [("k", "=", x)], dv=x % 2 == 0)
+        else:
+            t.restore(x % (t.latest_version() + 1))
+    latest = t.latest_version()
+    a = data.draw(st.integers(-1, latest - 1), label="a")
+    b = data.draw(st.integers(a + 1, latest), label="b")
+
+    def snap(v):
+        return Counter() if v < 0 else Counter((r.k, r.v) for r in t.read(version=v).collect())
+
+    def fold(feed):
+        ins = Counter((k, v) for k, v, c, _ in feed if c == "insert")
+        dels = Counter((k, v) for k, v, c, _ in feed if c == "delete")
+        return snap(a) + ins, snap(b) + dels
+
+    batch = [
+        (r.k, r.v, r._change_type, r._commit_version) for r in t.changes(a, b).collect()
+    ]
+    lhs, rhs = fold(batch)
+    assert lhs == rhs, ("batch", ops, a, b)
+
+    source = TxLogDataSource({"path": t.path, "readchangefeed": "true"})
+    reader = source.streamReader(source.schema())
+    stream = [
+        (r["k"], r["v"], r["_change_type"], r["_commit_version"])
+        for p in reader.partitions({"version": a}, {"version": b})
+        for batch_ in reader.read(p)
+        for r in batch_.to_pylist()
+    ]
+    lhs, rhs = fold(stream)
+    assert lhs == rhs, ("stream", ops, a, b)
+    assert Counter(stream) == Counter(batch)

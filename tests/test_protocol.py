@@ -6,8 +6,8 @@ import os
 
 import pytest
 
-from novlake_spark.sources.txlog_source import _PyLog
-from novlake_spark.txlog import ProtocolError, TxTable
+from novlake_spark.sources.txlog_source import _publish_local
+from novlake_spark.txlog import LogReader, ProtocolError, TxTable
 
 
 def _df(spark, *vals):
@@ -69,9 +69,9 @@ def test_future_reader_requirement_blocks_reads(spark, tmp_path):
         fresh.read()
     with pytest.raises(ProtocolError):
         fresh.snapshot_adds()
-    # the pure-Python planner enforces the same gate
+    # a JVM-free reader (what the data source plans from) enforces it too
     with pytest.raises(ProtocolError, match="min_reader=99"):
-        _PyLog(str(tmp_path / "t")).full_state()
+        LogReader(str(tmp_path / "t")).state()
 
 
 def test_future_writer_requirement_blocks_writes_not_reads(spark, tmp_path):
@@ -84,8 +84,9 @@ def test_future_writer_requirement_blocks_writes_not_reads(spark, tmp_path):
         fresh.commit(_df(spark, 2))
     # Python writer path refuses the same way
     with pytest.raises(ProtocolError, match="min_writer=99"):
-        _PyLog(str(tmp_path / "t")).try_publish(
-            {"version": 2, "mode": "append", "add": [], "remove": []}
+        _publish_local(
+            LogReader(str(tmp_path / "t")),
+            {"version": 2, "mode": "append", "add": [], "remove": []},
         )
 
 
@@ -121,7 +122,7 @@ def test_stale_republished_entry_cannot_downgrade(spark, tmp_path):
     v = t.latest_version()
     _raw_entry(path, v + 1, protocol={"min_reader": 1, "min_writer": 1})
     assert t.protocol() == {"min_reader": 1, "min_writer": 2}
-    assert _PyLog(path).full_state()[4] == {"min_reader": 1, "min_writer": 2}
+    assert LogReader(path).state()[4] == {"min_reader": 1, "min_writer": 2}
 
 
 def test_lost_upgrade_race_recomputes_fresh(spark, tmp_path):
@@ -145,17 +146,17 @@ def test_lost_upgrade_race_recomputes_fresh(spark, tmp_path):
     t._try_publish = racy_publish
     t.upgrade_protocol(min_writer=2)  # lower request, loses first attempt
     head = t.latest_version()
-    entry = t._read_entry(head)
+    entry = t._log.read_entry(head)
     assert entry["protocol"] == {"min_reader": 2, "min_writer": 2}, entry
 
 
 def test_state_resolution_retries_on_cleaned_checkpoint(spark, tmp_path):
     """ADVICE r3: a checkpoint deleted by a concurrent clean_log between
-    listing and read must be invisible — _state_at re-lists once."""
+    listing and read must be invisible — the state fold re-lists."""
     t = TxTable(spark, str(tmp_path / "t"))
     t.commit(_df(spark, 1, 2))
     t.checkpoint()
-    real_read = t._read_checkpoint
+    real_read = t._log.read_checkpoint
     calls = {"n": 0}
 
     def flaky_read(version):
@@ -164,22 +165,22 @@ def test_state_resolution_retries_on_cleaned_checkpoint(spark, tmp_path):
             raise FileNotFoundError(f"checkpoint-{version} cleaned")
         return real_read(version)
 
-    t._read_checkpoint = flaky_read
+    t._log.read_checkpoint = flaky_read
     assert sorted(r.x for r in t.read().collect()) == [1, 2]
     assert calls["n"] >= 2  # first read failed, retry resolved
 
 
 def test_writer_gate_protocol_cache_tracks_head(spark, tmp_path):
-    """_protocol_fast caches per head version: an upgrade (new head)
+    """protocol_fast caches per head version: an upgrade (new head)
     must invalidate, so the next publish sees the raised gate."""
     path = str(tmp_path / "t")
     t = TxTable(spark, path)
     t.commit(_df(spark, 1))
     t.commit(_df(spark, 2))  # prime the cache
-    assert t._protocol_fast() == {"min_reader": 1, "min_writer": 1}
+    assert t._log.protocol_fast() == {"min_reader": 1, "min_writer": 1}
     rival = TxTable(spark, path)
     rival.upgrade_protocol(min_writer=2)  # within our own support: ok
-    assert t._protocol_fast() == {"min_reader": 1, "min_writer": 2}
+    assert t._log.protocol_fast() == {"min_reader": 1, "min_writer": 2}
     v = t.latest_version()
     _raw_entry(path, v + 1, protocol={"min_reader": 1, "min_writer": 9})
     with pytest.raises(ProtocolError, match="min_writer=9"):

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from novlake_spark.replicate import apply_changes, replicate
+from novlake_spark.sources.txlog_source import TxLogDataSource
 from novlake_spark.txlog import TxTable
 
 
@@ -41,6 +42,32 @@ def test_replicates_appends_updates_deletes(spark, tmp_path):
     assert _rows(dst) == _rows(src)
     assert (17, 17 * 99) in _rows(dst)  # the update really landed
     assert all(k >= 5 for k, _ in _rows(dst))  # the delete really landed
+
+
+def test_restore_of_dv_file_streams_without_deleted_rows(spark, tmp_path):
+    """insert 0-3, DV delete k=1, overwrite, restore(1): the restore
+    re-publishes the vectored add. The stream's insert partition must
+    exclude the DV'd row (insert@3 = {0, 2, 3}, no resurrected 1), so a
+    replica fed by that stream equals the source."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 4).coalesce(1))
+    src.delete([("k", "=", 1)], dv=True)
+    src.commit(_kv(spark, 7, 8), mode="overwrite")
+    src.restore(1)
+    # the restore's micro-batch, through the stream reader's own hooks
+    source = TxLogDataSource({"path": src.path, "readchangefeed": "true"})
+    reader = source.streamReader(source.schema())
+    inserted = [
+        r["k"]
+        for p in reader.partitions({"version": 2}, {"version": 3})
+        if p.change_type == "insert"
+        for batch in reader.read(p)
+        for r in batch.to_pylist()
+    ]
+    assert sorted(inserted) == [0, 2, 3]
+    dst_path = str(tmp_path / "dst")
+    _pump(spark, src.path, dst_path, str(tmp_path / "cp"))
+    assert _rows(TxTable(spark, dst_path)) == _rows(src) == [(0, 0), (2, 20), (3, 30)]
 
 
 def test_replication_restart_is_incremental(spark, tmp_path):

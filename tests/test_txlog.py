@@ -473,8 +473,8 @@ def test_checkpoint_resolution_reads_only_the_tail(spark, tmp_path):
     t.commit(_df(spark, 100))
     fresh = TxTable(spark, str(tmp_path / "t"))
     read_versions = []
-    real_read = fresh._read_entry
-    fresh._read_entry = lambda v: (read_versions.append(v), real_read(v))[1]
+    real_read = fresh._log.read_entry
+    fresh._log.read_entry = lambda v: (read_versions.append(v), real_read(v))[1]
     assert sorted(r.x for r in fresh.read().collect()) == [0, 1, 2, 3, 4, 5, 100]
     assert set(read_versions) == {6}  # only the post-checkpoint tail
 

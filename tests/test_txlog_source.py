@@ -3,17 +3,20 @@ format("txlog") batch reads with pushed-filter file skipping, and
 readStream over the commit log — exactly-once tailing, checkpoint
 restart, change-feed mode."""
 
+import json
+import os
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.datasource import EqualTo, GreaterThan, IsNotNull
 
 from novlake_spark.sources.txlog_source import (
-    _PyLog,
+    _publish_local,
     _to_predicates,
     _TxLogBatchReader,
     register_txlog_source,
 )
-from novlake_spark.txlog import TxTable
+from novlake_spark.txlog import LogReader, TxTable, _HadoopFS, _OsFS
 
 
 def _kv(spark, lo, hi):
@@ -31,13 +34,58 @@ def table(spark, tmp_path):
     return t
 
 
-def test_pylog_matches_jvm_log(table):
-    py = _PyLog(table.path)
-    assert py.versions() == table.versions()
-    assert sorted(py.snapshot_files()) == sorted(table.snapshot_files())
-    assert py.schema_at() == table.schema_at()
-    # time travel agrees too
-    assert sorted(py.snapshot_files(0)) == sorted(table.snapshot_files(0))
+def test_pylog_matches_jvm_log(spark, tmp_path):
+    """One local table resolved through both filesystem seams — ``os``
+    (what TxTable and the data source use on local paths) and Hadoop
+    over py4j (the only seam for remote schemes, which no benchmark
+    reaches) — gives identical listings, states at the head and at older
+    versions, schema, protocol and TIMESTAMP AS OF. The log has a
+    parquet-sidecar checkpoint, a clean_log'ged prefix, a DV in the
+    sidecar and a pre-timestamp entry (mtime fallback)."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.checkpoint_interval = 0
+    t.parquet_checkpoint_rows = 1
+    for lo in range(0, 40, 10):
+        t.commit(_kv(spark, lo, lo + 10).coalesce(1))
+    t.delete([("k", "=", 3)], dv=True)
+    cp = t.checkpoint()  # version 4, add list in the sidecar
+    t.commit(_kv(spark, 40, 50))
+    t.upgrade_protocol(min_writer=2)
+    t.commit(_kv(spark, 50, 55).withColumn("s", F.lit("x")))  # schema evolves
+    assert t.clean_log(cp) == [0, 1, 2, 3, 4]
+    assert os.path.exists(os.path.join(t.path, "_log", f"checkpoint-{cp}.parquet"))
+    with open(os.path.join(t.path, "_log", "8.json"), "w") as f:  # no ts_ms
+        json.dump({"version": 8, "mode": "append", "add": [], "remove": []}, f)
+
+    local = LogReader(t.path)
+    jvm = LogReader(t.path, _HadoopFS(spark, t.path))
+    assert isinstance(local.fs, _OsFS) and isinstance(t._log.fs, _OsFS)
+    assert local.listing() == jvm.listing() == ([5, 6, 7, 8], [cp])
+    for v in (None, cp, 5, 6):
+        assert local.state(v) == jvm.state(v), v
+    assert local.state()[0] == t.snapshot_adds()
+    assert 3 in next(a for a in local.state(cp)[0] if a.get("dv"))["dv"]
+    assert local.schema_at() == jvm.schema_at() == t.schema_at()
+    assert local.schema_at(5) == jvm.schema_at(5) != local.schema_at()
+    assert local.protocol_fast() == jvm.protocol_fast() == {"min_reader": 1, "min_writer": 2}
+    times = [local.commit_time_ms(v) for v in (5, 6, 7, 8)]
+    assert times == [jvm.commit_time_ms(v) for v in (5, 6, 7, 8)]
+    for ts in times:
+        assert local.version_at_time(ts) == jvm.version_at_time(ts)
+    with pytest.raises(ValueError, match="not in log"):
+        jvm.state(2)  # cleaned: both seams refuse it
+    with pytest.raises(ValueError, match="not in log"):
+        local.state(2)
+
+
+def test_log_seam_follows_path_scheme(tmp_path):
+    """Scheme-less and file: paths read through os; any other scheme
+    needs the Hadoop seam, so a JVM-free reader refuses it."""
+    assert isinstance(LogReader(str(tmp_path)).fs, _OsFS)
+    assert isinstance(LogReader(f"file:{tmp_path}").fs, _OsFS)
+    assert LogReader(f"file:{tmp_path}").versions() == []  # no _log yet
+    with pytest.raises(NotImplementedError, match="remote"):
+        LogReader("s3a://bucket/t")
 
 
 def test_batch_read_equals_native(table):
@@ -306,14 +354,12 @@ def test_stream_sink_replayed_batch_is_noop(spark, tmp_path):
 def test_python_publish_loses_slot_to_jvm_writer(spark, tmp_path):
     """The pure-Python claim and Hadoop's rename-no-overwrite contend on
     the same directory entry — exactly one wins a version slot."""
-    from novlake_spark.sources.txlog_source import _PyLog
-
     t = TxTable(spark, str(tmp_path / "race"))
     t.commit(_kv(spark, 0, 5))
-    log = _PyLog(t.path)
-    assert log.try_publish({"version": 1, "mode": "append", "add": []}) is True
+    log = LogReader(t.path)
+    assert _publish_local(log, {"version": 1, "mode": "append", "add": []}) is True
     # slot 1 now taken: both a Python rival and a JVM writer must miss it
-    assert log.try_publish({"version": 1, "mode": "append", "add": []}) is False
+    assert _publish_local(log, {"version": 1, "mode": "append", "add": []}) is False
     v = t.commit(_kv(spark, 5, 10))  # JVM writer retries into slot 2
     assert v == 2
 

@@ -40,7 +40,7 @@ def main() -> None:
 
     spark = get_session("novlake-opt-bench", master=f"local[{cpus}]", shuffle_partitions=8)
     qs = queries()
-    from novlake_spark.operators.graph import release_persists
+    from novlake_spark.cache import release_tracked
 
     for key in keys:
         if key not in qs:
@@ -56,14 +56,14 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path}", file=sys.stderr)
-            release_persists()
+            release_tracked()
 
     results: dict[str, dict[str, float]] = {}
     # warm-up pass (JIT, codegen, file listing) exactly like bench.py
     for key in keys:
         spark.sparkContext.setJobDescription(f"warmup {key}")
         qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_persists()
+        release_tracked()
     for key in keys:
         samples = []
         for i in range(passes):
@@ -71,7 +71,7 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
-            release_persists()
+            release_tracked()
         results[key] = {"min": min(samples), "samples": samples}
         print(f"{key}: min={min(samples)} samples={samples}", flush=True)
     print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, "results": results}))

@@ -124,9 +124,9 @@ def main() -> int:
             # graph keys persist intermediates at reuse points; release
             # them per-key so a 229-key sweep doesn't build storage
             # pressure (same hygiene as bench.run_once)
-            from novlake_spark.operators.graph import release_persists
+            from novlake_spark.cache import release_tracked
 
-            release_persists()
+            release_tracked()
         bad = unhashable_cells(sdf)
         if bad:
             print(
