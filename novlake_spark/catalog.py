@@ -1,9 +1,13 @@
 """A persistent, file-backed table catalog — the role the reference
 delegated to AWS Glue (SURVEY.md §1: novlake registered every table in
 the Glue catalog so Athena could name it), re-expressed without any
-service dependency: one JSON document under the catalog root, updated
-with the same create-if-absent + rename protocol the transaction log
-uses, so two concurrent registrations can't tear it.
+service dependency: one versioned JSON document under the catalog root,
+published through the transaction log's filesystem seam — the same
+four methods (list, read, create-if-absent claim, delete), picked by
+the same scheme rule (``os`` for local and ``file:`` roots, Hadoop over
+py4j elsewhere) — so two concurrent registrations can't tear it. The
+catalog holds no data files, so nothing of it needs Hadoop on a local
+root.
 
 Entries name either a transaction-logged table (``format="txlog"``) or
 a plain directory of files (``parquet``/``csv``/``json``). ``attach``
@@ -13,7 +17,7 @@ views of txlog tables, carrying snapshot isolation into SQL.
 
 Scale note: the catalog document is O(tables), not O(data); a thousand
 tables is a ~100 KB JSON file read once per session. Concurrent
-mutation throughput is one rename per change — catalogs change at
+mutation throughput is one claim per change — catalogs change at
 human cadence, not data cadence, so contention is not a real concern
 (and losers just retry against the fresh document).
 """
@@ -21,11 +25,10 @@ human cadence, not data cadence, so contention is not a real concern
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import SparkSession
 
-from novlake_spark.txlog import atomic_claim
+from novlake_spark.txlog import _numbered, _seam
 
 
 class CatalogConflict(Exception):
@@ -37,62 +40,45 @@ class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._fs = self._jpath(self.root).getFileSystem(spark._jsc.hadoopConfiguration())
+        self.fs = _seam(spark, self.root)
 
     # The document is VERSIONED exactly like the transaction log:
-    # catalog-<N>.json, with N+1 claimed by rename-no-overwrite. A
+    # catalog-<N>.json, with N+1 claimed create-if-absent. A
     # delete-then-replace single file would be last-writer-wins — two
     # racing registrations would silently drop one entry (a real bug
     # the concurrency test caught in the first cut of this module).
+    def _file(self, v: int) -> str:
+        return f"{self.root}/catalog-{v}.json"
+
     def _versions(self) -> list[int]:
-        statuses = self._fs.globStatus(self._jpath(f"{self.root}/catalog-*.json")) or []
-        out = []
-        for s in statuses:
-            stem = s.getPath().getName().removeprefix("catalog-").removesuffix(".json")
-            if stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
+        return _numbered(self.fs.listdir(self.root), "catalog-")
 
     def _read(self, _retry: bool = True) -> dict:
         vs = self._versions()
         if not vs:
             return {"version": -1, "tables": {}}
         try:
-            stream = self._fs.open(self._jpath(f"{self.root}/catalog-{vs[-1]}.json"))
+            data = self.fs.read(self._file(vs[-1]))
         except Exception:
-            # list→open race with the mutators' lazy retention (4+
+            # list→read race with the mutators' lazy retention (4+
             # updates landed in between): the fresh listing has the
             # newer document
             if _retry:
                 return self._read(_retry=False)
             raise
-        try:
-            data = bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
         doc = json.loads(data.decode())
         doc["version"] = vs[-1]
         return doc
 
     def _mutate(self, fn, max_retries: int = 20) -> None:
-        self._fs.mkdirs(self._jpath(self.root))
         for _ in range(max_retries):
             doc = self._read()
             fn(doc)
             next_v = doc.pop("version") + 1
-            tmp = self._jpath(f"{self.root}/.tmp-{uuid.uuid4().hex}")
-            out = self._fs.create(tmp, False)
-            try:
-                out.write(bytearray(json.dumps(doc, indent=1).encode()))
-            finally:
-                out.close()
-            dst = self._jpath(f"{self.root}/catalog-{next_v}.json")
-            if atomic_claim(self.spark, self._fs, tmp, dst):
+            if self.fs.claim(self._file(next_v), json.dumps(doc, indent=1).encode()):
                 for v in self._versions():  # lazy retention: keep a few
                     if v < next_v - 3:
-                        self._fs.delete(self._jpath(f"{self.root}/catalog-{v}.json"), False)
+                        self.fs.delete(self._file(v))
                 return
             # lost the slot; re-read and retry
         raise CatalogConflict(f"lost {max_retries} catalog update races")

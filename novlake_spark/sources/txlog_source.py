@@ -35,18 +35,22 @@ batches as they stream through; the driver's ``commit`` hook publishes
 the entry), and ``writeStream.format("txlog")`` is an exactly-once
 streaming sink when given ``txnAppId`` — each micro-batch commits under
 txn ``<appId>@<batchId>``, so Spark replaying a batch after a crash is
-a log-detected no-op. Python and JVM writers interoperate on the same
-log: both claim a version slot with an atomic create-if-absent on the
-same directory entry (Hadoop rename-no-overwrite vs ``os.link``).
+a log-detected no-op.
 
 Log access goes through the same :class:`~novlake_spark.txlog.LogReader`
-TxTable uses, and change micro-batches come from the same
-:func:`~novlake_spark.txlog.plan_changes`, so the source and
-``TxTable.changes`` cannot disagree. The reader has two filesystem
-seams: ``os`` for local and ``file:`` paths, Hadoop over py4j for every
-other scheme. The DataSource API's driver hooks and executors run in
-Python workers without a JVM, so this source serves local paths only;
-executors open just the data files their partition names.
+TxTable uses: this writer and TxTable publish with the same
+``LogReader.publish`` (writer gate, ``ts_ms`` stamp, create-if-absent
+claim of the version slot) and evolve schemas with the same
+:func:`~novlake_spark.txlog.check_schema`, and change micro-batches come
+from the same :func:`~novlake_spark.txlog.plan_changes`, so the source
+and ``TxTable.changes`` cannot disagree. The reader's filesystem seam
+has four methods (list, read, claim, delete) and two implementations:
+``os`` for local and ``file:`` paths, Hadoop over py4j for every other
+scheme. The DataSource API's driver hooks and executors run in Python
+workers without a JVM, so this source serves local paths only;
+executors open just the data files their partition names, and write
+their own parquet files with Arrow (no ``.crc`` sidecars to keep in
+step, unlike Spark's Hadoop writes).
 """
 
 from __future__ import annotations
@@ -54,7 +58,6 @@ from __future__ import annotations
 import base64
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -83,14 +86,13 @@ from novlake_spark.txlog import (
     _STAT_TYPES,
     CommitConflict,
     LogReader,
-    SchemaMismatch,
     _bloom_positions,
     _is_mapped,
-    _is_superset,
     _local_path,
     _phys_map,
     _stat_value,
     appended_units,
+    check_schema,
     file_matches,
     plan_changes,
 )
@@ -106,30 +108,6 @@ def _add_path(root: str, add: dict) -> str:
     """Local path of an add-action's data file; honors a shallow-cloned
     add's ``path`` the same way ``TxTable._data_path`` does."""
     return _local_path(add.get("path") or f"{root}/data/{add['file']}")
-
-
-def _publish_local(log: LogReader, entry: dict) -> bool:
-    """Pure-Python twin of ``TxTable._try_publish``: temp under
-    ``_log/_tmp``, then an atomic create-if-absent claim of the version
-    slot via ``os.link`` (hard-link creation fails when the destination
-    exists — POSIX's rename-no-overwrite). A JVM writer racing this one
-    loses or wins the same slot cleanly: Hadoop's local rename and
-    ``link`` are both atomic on the same directory entry."""
-    if entry["version"] > 0:  # version 0 creates the table
-        log.require_writer()
-    entry.setdefault("ts_ms", int(time.time() * 1000))
-    log_dir = os.path.join(_local_path(log.path), "_log")
-    os.makedirs(os.path.join(log_dir, "_tmp"), exist_ok=True)
-    tmp = os.path.join(log_dir, "_tmp", uuid.uuid4().hex)
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-    try:
-        os.link(tmp, os.path.join(log_dir, f"{entry['version']}.json"))
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
 
 
 @dataclass
@@ -513,28 +491,6 @@ class _WriterCore:
                 except FileNotFoundError:
                     pass
 
-    def _schema_action(self, cur_schema_json: str | None) -> str | None:
-        """Mirror of ``TxTable._check_schema`` over the writer's schema."""
-        new_json = json.dumps(self._schema.jsonValue())
-        if self._mode == "overwrite" or cur_schema_json is None:
-            return new_json
-        cur = T.StructType.fromJson(json.loads(cur_schema_json))
-        if self._schema == cur:
-            return None
-        if _is_superset(self._schema, cur):
-            return new_json  # additive evolution
-        missing = [f.name for f in cur.fields if f.name not in self._schema.fieldNames()]
-        changed = [
-            f.name
-            for f in cur.fields
-            if f.name in self._schema.fieldNames()
-            and self._schema[f.name].dataType != f.dataType
-        ]
-        raise SchemaMismatch(
-            f"write to {self._log.path} incompatible with table schema: "
-            f"missing columns {missing}, changed types {changed}"
-        )
-
     def _publish(self, messages, txn: str | None, max_retries: int = 20) -> int:
         adds = self._adds(messages)
         for _ in range(max_retries):
@@ -562,9 +518,10 @@ class _WriterCore:
                     f"table {self._log.path} has identity column "
                     f"{sorted(identity)}; write through TxTable.commit"
                 )
-            if cur_schema_json is not None and _is_mapped(
-                T.StructType.fromJson(json.loads(cur_schema_json))
-            ):
+            cur = None if cur_schema_json is None else T.StructType.fromJson(
+                json.loads(cur_schema_json)
+            )
+            if _is_mapped(cur):
                 # column-mapped tables write files under PHYSICAL names;
                 # this writer landed logical-named files. Refuse rather
                 # than publish files every reader would misbind.
@@ -573,7 +530,7 @@ class _WriterCore:
                     f"table {self._log.path} has column mapping enabled; "
                     "write through TxTable.commit"
                 )
-            schema_action = self._schema_action(cur_schema_json)
+            schema_action = check_schema(self._schema, cur, self._mode, self._log.path)
             latest = self._log.latest_version()
             entry: dict = {
                 "version": 0 if latest is None else latest + 1,
@@ -584,7 +541,7 @@ class _WriterCore:
                 entry["schema"] = schema_action
             if txn is not None:
                 entry["txn"] = txn
-            if _publish_local(self._log, entry):
+            if self._log.publish(entry):
                 return entry["version"]
             # lost the slot to a rival — loop re-reads the tail (pure
             # appends always compose; this writer never removes files)

@@ -3,11 +3,13 @@
 ``foreachBatch`` gives at-least-once invocation: after a failure the
 engine replays the last micro-batch. This helper turns that into
 exactly-once table state by keying every commit with
-``"<query-id>.<batch-id>"`` — :meth:`TxTable.commit`/:meth:`~TxTable.merge`
+``"<txn_app>.<batch-id>"`` — :meth:`TxTable.commit`/:meth:`~TxTable.merge`
 skip a txn id already in the log, so a replayed batch is a no-op (the
 idempotent-sink pattern from the Structured Streaming docs, with the
 txn ledger living in the table's own commit log instead of a side
 store; markers survive checkpointing + clean_log, see txlog.LogReader.state).
+``txn_app`` names the stream: it must stay the same across restarts
+from one checkpoint and differ between streams writing one table.
 
 Exactly-once APPENDS need no helper: ``writeStream.format("txlog")``
 with ``txnAppId`` commits each micro-batch under ``<appId>@<batchId>``.
@@ -27,7 +29,9 @@ from pyspark.sql import DataFrame
 from novlake_spark.txlog import TxTable
 
 
-def txtable_upsert_sink(path: str, key: list[str]) -> Callable[[DataFrame, int], None]:
+def txtable_upsert_sink(
+    path: str, key: list[str], txn_app: str
+) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` callable: MERGE each micro-batch into the table
     on ``key`` exactly once — the streaming-CDC upsert shape (latest
     state per key). The batch must hold one row per key (pre-aggregate
@@ -35,21 +39,6 @@ def txtable_upsert_sink(path: str, key: list[str]) -> Callable[[DataFrame, int],
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         t = TxTable(batch_df.sparkSession, path)
-        t.merge(batch_df, key=key, txn=f"{_qid(batch_df)}.{batch_id}")
+        t.merge(batch_df, key=key, txn=f"{txn_app}.{batch_id}")
 
     return sink
-
-
-def _qid(batch_df: DataFrame) -> str:
-    """Stable per-query id for txn keys: survives restarts from the
-    same checkpoint (streaming query id is persisted there), so a
-    replayed batch after restart carries the SAME txn id."""
-    spark = batch_df.sparkSession
-    # inside foreachBatch the active stream is the one delivering us
-    streams = spark.streams.active
-    if len(streams) == 1:
-        return str(streams[0].id)
-    # ambiguous (several queries) — fall back to app id, still stable
-    # within a run; callers needing cross-restart exactness with
-    # multiple queries should build the txn key themselves
-    return str(spark.sparkContext.applicationId)

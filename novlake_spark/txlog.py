@@ -15,10 +15,10 @@ Why a log instead of directory listing:
   once; concurrent commits create N+1, N+2… and never mutate existing
   log entries or data files, so a long scan is never torn.
 - **Optimistic concurrency.** Version N+1 is claimed by creating
-  ``_log/{N+1}.json`` with create-if-absent semantics (Hadoop
-  ``rename`` onto an existing destination fails; HDFS/POSIX make this
-  atomic). Exactly one of two racing writers wins; the loser re-reads
-  the log, checks for LOGICAL conflicts (an interleaved commit that
+  ``_log/{N+1}.json`` with create-if-absent semantics (a hard link on
+  local disks, Hadoop's rename-no-overwrite on HDFS; both atomic).
+  Exactly one of two racing writers wins; the loser re-reads the log,
+  checks for LOGICAL conflicts (an interleaved commit that
   removed files this commit also removes, or an overwrite), and either
   rebases onto the new tail (pure appends compose) or raises
   :class:`CommitConflict` (remove/remove — e.g. two concurrent
@@ -116,6 +116,12 @@ def _missing_file(exc: Exception) -> bool:
         # executor-side java.io exception) — same concurrent-clean_log
         # cause, same retry answer.
         or "PATH_NOT_FOUND" in s
+        # ...and when it vanishes between that existence check and
+        # Spark's file listing, Spark drops the missing root path from
+        # its file index and schema inference finds no file at all. A
+        # sidecar is claimed whole, never empty, so on it this error has
+        # no other cause.
+        or "UNABLE_TO_INFER_SCHEMA" in s
         # ...and when the file vanishes between plan time and task
         # execution, the EXECUTOR raises FAILED_READ_FILE.* — usually
         # FILE_NOT_EXIST ("File does not exist. It is possible the
@@ -253,12 +259,16 @@ def replay(entries: list[dict]) -> list[str]:
 
 # -- the log reader -------------------------------------------------------
 # One reader serves TxTable, the format("txlog") data source and its
-# streaming source. All of its I/O goes through a two-method filesystem
-# seam — list a directory (names and mtimes), read a file's bytes — so
-# the checkpoint+tail fold, the protocol gate and the clean_log retry
-# exist once. Local and file: paths use os (no JVM round trip per
-# listing or entry); every other scheme goes through Hadoop over py4j,
-# the only seam that reaches remote filesystems.
+# streaming source, and one writer protocol publishes for all of them
+# and for the catalog. All log I/O goes through a four-method filesystem
+# seam: list a directory (names and mtimes), read a file's bytes, claim
+# a name with create-if-absent (the commit point) and delete a file.
+# Local and file: paths use os (no JVM round trip per listing, entry or
+# publish); every other scheme goes through Hadoop over py4j, the only
+# seam that reaches remote filesystems. Data files stay on Hadoop on
+# every scheme: Spark's local writes leave .crc sidecars next to them,
+# and only Hadoop's checksum filesystem keeps those in step on rename
+# and delete. The log has no sidecars.
 
 
 def _local_path(path: str) -> str:
@@ -269,6 +279,12 @@ def _local_path(path: str) -> str:
 def _is_local(path: str) -> bool:
     """Scheme-less and ``file:`` paths are local; the rest are remote."""
     return urlparse(path).scheme in ("", "file")
+
+
+def _tmp_name(path: str) -> str:
+    """A fresh temp name under ``path``'s directory's ``_tmp/`` — outside
+    every numbered namespace a listing accepts."""
+    return f"{path.rsplit('/', 1)[0]}/_tmp/{uuid.uuid4().hex}"
 
 
 class _OsFS:
@@ -291,6 +307,31 @@ class _OsFS:
     def read(self, path: str) -> bytes:
         with open(_local_path(path), "rb") as f:
             return f.read()
+
+    def claim(self, path: str, data: bytes) -> bool:
+        """Create ``path`` holding ``data`` unless it exists. The temp
+        file is hard-linked onto the name: ``link`` fails when the
+        destination exists, atomically in the kernel (Hadoop's local
+        rename is an exists() check then a POSIX rename, a window in
+        which two writers both win)."""
+        tmp = _local_path(_tmp_name(path))
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        with open(tmp, "wb") as f:
+            f.write(data)
+        try:
+            os.link(tmp, _local_path(path))
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+
+    def delete(self, path: str) -> None:
+        """Remove ``path``; a file that is already gone is not an error."""
+        try:
+            os.unlink(_local_path(path))
+        except FileNotFoundError:
+            pass
 
 
 class _HadoopFS:
@@ -319,6 +360,29 @@ class _HadoopFS:
             return bytes(self._io.toByteArray(stream))
         finally:
             stream.close()
+
+    def claim(self, path: str, data: bytes) -> bool:
+        """Create ``path`` holding ``data`` unless it exists: Hadoop's
+        rename fails when the destination exists (unlike POSIX), and
+        HDFS's namenode makes that check atomic."""
+        tmp = self._path(_tmp_name(path))
+        out = self._fs.create(tmp, False)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+        claimed = bool(self._fs.rename(tmp, self._path(path)))
+        if not claimed:
+            self._fs.delete(tmp, False)
+        return claimed
+
+    def delete(self, path: str) -> None:
+        self._fs.delete(self._path(path), False)
+
+
+def _seam(spark: SparkSession, path: str):
+    """The filesystem seam for ``path``: ``os`` when local, else Hadoop."""
+    return _OsFS() if _is_local(path) else _HadoopFS(spark, path)
 
 
 def _numbered(names, prefix: str) -> list[int]:
@@ -354,17 +418,19 @@ def _resolve(vs: list[int], cps: list[int], version: int | None) -> int | None:
 
 
 class LogReader:
-    """Reads one table's ``_log/``: listing, the immutable-entry cache,
-    JSON and parquet-sidecar checkpoint decode, the checkpoint+tail
-    fold (with or without the add list), the protocol gates and
-    ``TIMESTAMP AS OF`` resolution.
+    """Reads one table's ``_log/`` and publishes its commits: listing,
+    the immutable-entry cache, JSON and parquet-sidecar checkpoint
+    decode, the checkpoint+tail fold (with or without the add list), the
+    protocol gates, ``TIMESTAMP AS OF`` resolution and :meth:`publish`,
+    the one commit point of every writer.
 
-    All I/O goes through ``fs``, a seam of two methods: ``listdir``
-    (names and mtimes) and ``read`` (a file's bytes). Scheme-less and
-    ``file:`` paths default to ``os``; any other scheme needs the
-    Hadoop seam (``_HadoopFS``, built from a SparkSession), which is
-    what TxTable passes for remote tables. Without a JVM the reader
-    still serves local tables — the Python data source plans from it."""
+    All I/O goes through ``fs``, a seam of four methods: ``listdir``
+    (names and mtimes), ``read`` (a file's bytes), ``claim``
+    (create-if-absent) and ``delete``. Scheme-less and ``file:`` paths
+    default to ``os``; any other scheme needs the Hadoop seam
+    (``_HadoopFS``, built from a SparkSession), which is what TxTable
+    passes for remote tables. Without a JVM the reader still serves and
+    publishes to local tables — the Python data source runs on it."""
 
     #: Protocol capability of THIS implementation (Delta's protocol
     #: action, simplified to two integers). Tables carry a
@@ -555,6 +621,17 @@ class LogReader:
                 f"but this client supports {self.WRITER_VERSION}; "
                 "upgrade the client to write this table"
             )
+
+    def publish(self, entry: dict) -> bool:
+        """Claim ``entry['version']``: create ``_log/<version>.json``
+        unless it exists, so exactly one racing writer wins each slot;
+        False means a rival took it. This is the writer-side protocol
+        gate (:meth:`require_writer`) and stamps ``ts_ms``, the commit
+        wall time ``TIMESTAMP AS OF`` resolves against."""
+        if entry["version"] > 0:  # version 0 creates the table; nothing to gate
+            self.require_writer()
+        entry.setdefault("ts_ms", int(time.time() * 1000))
+        return self.fs.claim(self._file(f"{entry['version']}.json"), json.dumps(entry).encode())
 
     # -- time travel --------------------------------------------------------
     def commit_time_ms(self, version: int, mtimes: dict[str, int] | None = None) -> int:
@@ -805,42 +882,6 @@ def _bloom_test(b64bits: str, value: str, m: int, k: int) -> bool:
     return True
 
 
-def atomic_claim(spark, fs, tmp, dst) -> bool:
-    """Publish ``tmp``'s content at ``dst``, atomically failing if
-    ``dst`` exists — the commit point of every log/catalog protocol in
-    this package.
-
-    On HDFS (and rename-capable stores) ``fs.rename`` is the right
-    primitive: the namenode makes no-overwrite rename atomic. On the
-    LOCAL filesystem Hadoop's rename is an exists() check followed by
-    POSIX ``renameTo`` — a TOCTOU window in which two racing writers
-    BOTH pass the check and silently overwrite each other (observed:
-    concurrent catalog registrations dropped entries; the same window
-    existed latently in the transaction log's publish). There the claim
-    is an OS hard link instead, which the kernel makes
-    fail-if-exists atomically — the same primitive the pure-Python
-    writer (txlog_source) uses, so JVM and Python writers contend
-    correctly on one directory entry. ``tmp`` is always consumed."""
-    if "Local" in fs.getClass().getName():
-        jvm = spark._jvm
-        try:
-            jvm.java.nio.file.Files.createLink(
-                jvm.java.io.File(dst.toUri().getPath()).toPath(),
-                jvm.java.io.File(tmp.toUri().getPath()).toPath(),
-            )
-            claimed = True
-        except Exception as exc:  # Py4J wraps the Java exception
-            if "FileAlreadyExists" not in str(exc):
-                raise
-            claimed = False
-        fs.delete(tmp, False)
-        return claimed
-    claimed = bool(fs.rename(tmp, dst))
-    if not claimed:
-        fs.delete(tmp, False)
-    return claimed
-
-
 def _is_superset(new: T.StructType, cur: T.StructType) -> bool:
     fields = {f.name: f.dataType for f in new.fields}
     return all(f.name in fields and fields[f.name] == f.dataType for f in cur.fields)
@@ -895,6 +936,49 @@ def _strip_meta(schema: T.StructType) -> T.StructType:
     return T.StructType(
         [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
     )
+
+
+def check_schema(
+    new: T.StructType, cur: T.StructType | None, mode: str, path: str
+) -> str | None:
+    """The schema-evolution rule every writer applies: validate a
+    ``mode`` ("append"/"overwrite") write of ``new`` against the recorded
+    schema ``cur`` and return the schema JSON to record in its entry
+    (None = unchanged). An overwrite redefines the schema, an additive
+    superset evolves it, anything else raises :class:`SchemaMismatch`.
+    Comparison ignores field metadata (the physical-name mapping lives
+    there). On a column-mapped table every recorded schema keeps each
+    surviving field's physical name and mints a fresh ``col-<uuid>`` for
+    NEW fields — a dropped-then-readded logical name therefore binds to
+    a new physical id and can never resurrect the dropped column's
+    bytes."""
+    if cur is None:
+        return json.dumps(new.jsonValue())
+    if mode != "overwrite":
+        if _strip_meta(new) == _strip_meta(cur):
+            return None
+        if not _is_superset(new, cur):
+            missing = [f.name for f in cur.fields if f.name not in new.fieldNames()]
+            changed = [
+                f.name for f in cur.fields
+                if f.name in new.fieldNames() and new[f.name].dataType != f.dataType
+            ]
+            raise SchemaMismatch(
+                f"append to {path} incompatible with table schema: "
+                f"missing columns {missing}, changed types {changed}"
+            )
+    if not _is_mapped(cur):
+        return json.dumps(new.jsonValue())
+    by_name = {f.name: f for f in cur.fields}
+    fields = []
+    for f in new.fields:
+        old = by_name.get(f.name)
+        meta = dict(f.metadata or {})
+        meta["physical"] = (
+            _phys_name(old) if old is not None else f"col-{uuid.uuid4().hex[:12]}"
+        )
+        fields.append(T.StructField(f.name, f.dataType, f.nullable, meta))
+    return json.dumps(T.StructType(fields).jsonValue())
 
 
 def _decode_checkpoint_parquet(data: bytes) -> list[dict]:
@@ -968,9 +1052,11 @@ class TxTable:
     (double defense; the single-glob version of this was a real
     crash-the-table bug, see ADVICE round 2).
 
-    Reads go through one :class:`LogReader` (``os`` on local paths,
-    Hadoop over py4j elsewhere); publishes, checkpoints and data files
-    are written through the Hadoop FileSystem API.
+    Log reads and writes — publishes, checkpoints, ``clean_log`` — go
+    through one :class:`LogReader` and its filesystem seam (``os`` on
+    local paths, Hadoop over py4j elsewhere). Data files are written,
+    renamed and deleted through the Hadoop FileSystem API on every
+    scheme, which keeps Spark's ``.crc`` sidecars in step with them.
     """
 
     #: Auto-checkpoint cadence: every Nth version writes a checkpoint
@@ -985,18 +1071,16 @@ class TxTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        self._log = LogReader(
-            self.path, None if _is_local(self.path) else _HadoopFS(spark, self.path)
-        )
+        self._log = LogReader(self.path, _seam(spark, self.path))
         #: Columns to build per-file Bloom filters for on commit (point-
         #: lookup skipping on high-cardinality int/string keys — min/max
         #: can't prune those). Set before committing; files written
         #: earlier simply lack the filter and stay conservatively kept.
         self.bloom_cols: list[str] = []
 
-    # Writes (and data-file checks on remote tables) go through Hadoop;
-    # opened on first use, so a read-only TxTable on a local path never
-    # touches py4j for log work.
+    # Data-file writes (and data-file checks on remote tables) go
+    # through Hadoop; opened on first use, so log work on a local path
+    # never touches py4j.
     @functools.cached_property
     def _jpath(self):
         return self.spark._jvm.org.apache.hadoop.fs.Path
@@ -1020,35 +1104,6 @@ class TxTable:
     def latest_version(self) -> int | None:
         return self._log.latest_version()
 
-    def _try_publish(self, entry: dict) -> bool:
-        """Atomically claim ``entry['version']``: write a temp file under
-        ``_log/_tmp/`` (invisible to ``versions()``), rename onto the
-        final name. Hadoop's rename contract fails when the destination
-        exists (unlike POSIX), which makes the rename the commit point —
-        exactly one racing writer's rename succeeds.
-
-        Every entry is stamped ``ts_ms`` (commit wall time) here — the
-        single choke point all JVM-side publishes pass through — which
-        is what ``TIMESTAMP AS OF`` time travel resolves against. Being
-        the choke point also makes it the writer-side protocol gate
-        (:meth:`LogReader.require_writer`).
-        """
-        if entry["version"] > 0:  # version 0 creates the table; nothing to gate
-            self._log.require_writer()
-        entry.setdefault("ts_ms", int(time.time() * 1000))
-        return self._claim(f"{entry['version']}.json", json.dumps(entry).encode())
-
-    def _claim(self, name: str, data: bytes) -> bool:
-        """Publish ``data`` as ``_log/<name>`` unless that exists: a temp
-        file under ``_log/_tmp/``, then :func:`atomic_claim`."""
-        tmp = self._jpath(f"{self.path}/_log/_tmp/{uuid.uuid4().hex}")
-        out = self._fs.create(tmp, False)
-        try:
-            out.write(bytearray(data))
-        finally:
-            out.close()
-        return atomic_claim(self.spark, self._fs, tmp, self._jpath(f"{self.path}/_log/{name}"))
-
     # -- checkpoints ---------------------------------------------------------
     # At 100 TB-scale commit counts, replaying every JSON entry per read
     # is O(commits) metadata round-trips. A checkpoint materializes the
@@ -1069,8 +1124,8 @@ class TxTable:
 
     def checkpoint(self, version: int | None = None) -> int:
         """Write a checkpoint of the state at ``version`` (default
-        latest). Idempotent and atomic (same tmp+rename protocol as log
-        entries; a racing duplicate simply loses the rename — and since
+        latest). Idempotent and atomic (same create-if-absent claim as log
+        entries; a racing duplicate simply loses the claim — and since
         both rivals checkpoint the SAME immutable state, either copy is
         correct, including the parquet sidecar). Returns the
         checkpointed version."""
@@ -1092,15 +1147,15 @@ class TxTable:
         if len(adds) >= self.parquet_checkpoint_rows:
             self._write_checkpoint_parquet(upto, adds)
             doc = {**doc, "adds": [], "adds_parquet": True}
-        self._claim(f"checkpoint-{upto}.json", json.dumps(doc).encode())
+        self._log.fs.claim(self._log._file(f"checkpoint-{upto}.json"), json.dumps(doc).encode())
         return upto  # a lost claim means a rival already checkpointed it
 
     def _write_checkpoint_parquet(self, version: int, adds: list[dict]) -> None:
         """The columnar add-list sidecar: one row per add action, nested
         stats/bloom JSON-encoded per row (they are opaque to columnar
         pruning anyway). Written driver-side via Arrow — the add list is
-        driver state by construction — through the same tmp +
-        atomic-claim protocol as every other log artifact."""
+        driver state by construction — through the same create-if-absent
+        claim as every other log artifact."""
         import io
 
         import pyarrow as pa
@@ -1126,7 +1181,7 @@ class TxTable:
         buf = io.BytesIO()
         pq.write_table(table, buf, compression="zstd")
         # a lost claim is harmless: the rival's copy is identical
-        self._claim(f"checkpoint-{version}.parquet", buf.getvalue())
+        self._log.fs.claim(self._log._file(f"checkpoint-{version}.parquet"), buf.getvalue())
 
     def clean_log(self, keep_from_version: int) -> list[int]:
         """Delete log entries no retained snapshot needs: everything at
@@ -1145,7 +1200,7 @@ class TxTable:
         removed = []
         for v in vs:
             if v <= horizon:
-                self._fs.delete(self._jpath(f"{self.path}/_log/{v}.json"), False)
+                self._log.fs.delete(self._log._file(f"{v}.json"))
                 self._log._entries.pop(v, None)
                 removed.append(v)
         # checkpoints BELOW the horizon are now strictly superseded —
@@ -1155,9 +1210,7 @@ class TxTable:
         for c in cps:
             if c < horizon:
                 for ext in ("json", "parquet"):
-                    self._fs.delete(
-                        self._jpath(f"{self.path}/_log/checkpoint-{c}.{ext}"), False
-                    )
+                    self._log.fs.delete(self._log._file(f"checkpoint-{c}.{ext}"))
         return removed
 
     # -- snapshot resolution -----------------------------------------------
@@ -1235,7 +1288,7 @@ class TxTable:
             # Re-check the one-identity-column invariant INSIDE the
             # claim loop: two racing set_identity calls for different
             # columns both pass the entry check above (both see an empty
-            # map), but the loser's rename fails, its retry re-invokes
+            # map), but the loser's claim fails, its retry re-invokes
             # build at the next slot, and THIS fresh read sees the
             # winner — check-then-publish becomes check-at-publish.
             rival = self.identity()
@@ -1921,54 +1974,9 @@ class TxTable:
                 "set_stats": set_stats,
                 "op": "ANALYZE",
             }
-            if self._try_publish(entry):
+            if self._log.publish(entry):
                 return entry["version"]
         raise CommitConflict(f"lost {max_retries} commit races on {self.path}")
-
-    def _check_schema(self, df: DataFrame, mode: str) -> str | None:
-        """Validate an append against the recorded schema; return the
-        schema JSON to record in the entry (None = unchanged).
-        Comparison ignores field metadata (the physical-name mapping
-        lives there); any evolved schema re-attaches the mapping so a
-        recorded evolution can never wipe it."""
-        new = df.schema
-        cur = self.schema_at()
-        if mode == "overwrite":
-            return json.dumps(self._attach_mapping(new, cur).jsonValue())
-        if cur is None:
-            return json.dumps(new.jsonValue())
-        if _strip_meta(new) == _strip_meta(cur):
-            return None
-        if _is_superset(new, cur):
-            return json.dumps(self._attach_mapping(new, cur).jsonValue())  # additive evolution
-        missing = [f.name for f in cur.fields if f.name not in new.fieldNames()]
-        changed = [
-            f.name for f in cur.fields
-            if f.name in new.fieldNames() and new[f.name].dataType != f.dataType
-        ]
-        raise SchemaMismatch(
-            f"append to {self.path} incompatible with table schema: "
-            f"missing columns {missing}, changed types {changed}"
-        )
-
-    def _attach_mapping(self, new: T.StructType, cur: T.StructType | None) -> T.StructType:
-        """On a column-mapped table, carry each surviving field's
-        physical name into the evolved schema and mint a fresh
-        ``col-<uuid>`` physical for NEW fields — a dropped-then-readded
-        logical name therefore binds to a new physical id and can never
-        resurrect the dropped column's bytes."""
-        if cur is None or not _is_mapped(cur):
-            return new
-        by_name = {f.name: f for f in cur.fields}
-        fields = []
-        for f in new.fields:
-            old = by_name.get(f.name)
-            meta = dict(f.metadata or {})
-            meta["physical"] = (
-                _phys_name(old) if old is not None else f"col-{uuid.uuid4().hex[:12]}"
-            )
-            fields.append(T.StructField(f.name, f.dataType, f.nullable, meta))
-        return T.StructType(fields)
 
     def _logical_conflict(self, entries: list[dict], remove_set: set[str]) -> str | None:
         """A commit that REMOVES files conflicts with any interleaved
@@ -2105,7 +2113,7 @@ class TxTable:
                         c, F.lit(int(hw) + 1) + F.monotonically_increasing_id()
                     )
                     id_assigned = True
-        schema_json = self._check_schema(df, mode)
+        schema_json = check_schema(df.schema, self.schema_at(), mode, self.path)
         if cluster_by:
             # Ingest-time clustering: range-partition + sort the commit
             # on the cluster keys so each file covers a NARROW key range
@@ -2199,9 +2207,9 @@ class TxTable:
                 entry["schema"] = schema_json
             if txn is not None:
                 entry["txn"] = txn
-            if self._try_publish(entry):
+            if self._log.publish(entry):
                 if self.checkpoint_interval and version and version % self.checkpoint_interval == 0:
-                    self.checkpoint(version)  # best-effort; rivals' duplicates lose the rename
+                    self.checkpoint(version)  # best-effort; rivals' duplicates lose the claim
                 return version
             # lost the race: another writer claimed this version. If it
             # was our own txn replayed elsewhere, we're already done;
@@ -2649,7 +2657,7 @@ class TxTable:
             why = self._dv_conflict(interleaved, set(set_dv))
             if why is not None:
                 raise CommitConflict(f"{self.path}: {why}")
-            if self._try_publish(entry):
+            if self._log.publish(entry):
                 if self.checkpoint_interval and entry["version"] % self.checkpoint_interval == 0:
                     self.checkpoint(entry["version"])
                 return entry["version"]
@@ -2914,7 +2922,7 @@ class TxTable:
         }
         if schema_json is not None:
             entry["schema"] = schema_json
-        if not tgt._try_publish(entry):
+        if not tgt._log.publish(entry):
             raise CommitConflict(f"clone target {target_path} was created concurrently")
         return tgt
 
@@ -3004,17 +3012,14 @@ class TxTable:
             raise FileNotFoundError(f"no committed schema under {self.path}")
         if name in schema.fieldNames():
             raise ValueError(f"column {name!r} already exists")
-        new = self._attach_mapping(
-            T.StructType(
-                schema.fields
-                + [T.StructField(name, T._parse_datatype_string(dtype), True)]
-            ),
-            schema,
+        new = T.StructType(
+            schema.fields + [T.StructField(name, T._parse_datatype_string(dtype), True)]
         )
+        schema_json = check_schema(new, schema, "append", self.path)
 
         def build(v: int) -> dict:
             return {"version": v, "mode": "append", "add": [], "remove": [],
-                    "schema": json.dumps(new.jsonValue()), "op": "ADD COLUMN"}
+                    "schema": schema_json, "op": "ADD COLUMN"}
 
         return self._publish_meta(build, max_retries)
 
@@ -3137,7 +3142,7 @@ class TxTable:
         for _ in range(max_retries):
             latest = self.latest_version()
             version = latest + 1 if latest is not None else 0
-            if self._try_publish(build_entry(version)):
+            if self._log.publish(build_entry(version)):
                 return version
         raise CommitConflict(f"lost {max_retries} commit races on {self.path}")
 

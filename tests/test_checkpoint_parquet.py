@@ -439,6 +439,20 @@ def test_distributed_scan_retries_on_cleaned_checkpoint(spark, tmp_path):
     assert calls["n"] >= 2  # first read failed, retry resolved
 
 
+def test_sidecar_vanishing_before_spark_lists_it_is_retried(spark, tmp_path):
+    """A sidecar deleted by clean_log after Spark's existence check but
+    before its file listing leaves an empty file index, and the scan
+    fails with UNABLE_TO_INFER_SCHEMA instead of a missing-file error;
+    the distributed scan's retry must take it as the same race."""
+    from novlake_spark.txlog import _missing_file
+
+    os.makedirs(tmp_path / "empty")
+    with pytest.raises(Exception) as info:
+        spark.read.parquet(str(tmp_path / "empty"))
+    assert "UNABLE_TO_INFER_SCHEMA" in str(info.value)
+    assert _missing_file(info.value)
+
+
 @pytest.mark.chaos
 def test_clean_log_chaos_distributed_readers(spark, tmp_path):
     """Round-5 stretch audit of the round-4 distributed surfaces: the

@@ -81,7 +81,7 @@ def test_allocation_race_conflicts(spark, tmp_path):
     t.set_identity("id")
     t.commit(_df(spark, 1))
     rival = TxTable(spark, str(tmp_path / "t"))
-    real_publish = t._try_publish
+    real_publish = t._log.publish
 
     def racy_publish(entry):
         if not racy_publish.raced:
@@ -90,7 +90,7 @@ def test_allocation_race_conflicts(spark, tmp_path):
         return real_publish(entry)
 
     racy_publish.raced = False
-    t._try_publish = racy_publish
+    t._log.publish = racy_publish
     with pytest.raises(CommitConflict, match="identity watermark"):
         t.commit(_df(spark, 2))
     # the table still holds exactly the rival's rows, no orphans

@@ -6,7 +6,6 @@ import os
 
 import pytest
 
-from novlake_spark.sources.txlog_source import _publish_local
 from novlake_spark.txlog import LogReader, ProtocolError, TxTable
 
 
@@ -84,8 +83,7 @@ def test_future_writer_requirement_blocks_writes_not_reads(spark, tmp_path):
         fresh.commit(_df(spark, 2))
     # Python writer path refuses the same way
     with pytest.raises(ProtocolError, match="min_writer=99"):
-        _publish_local(
-            LogReader(str(tmp_path / "t")),
+        LogReader(str(tmp_path / "t")).publish(
             {"version": 2, "mode": "append", "add": [], "remove": []},
         )
 
@@ -133,7 +131,7 @@ def test_lost_upgrade_race_recomputes_fresh(spark, tmp_path):
     t = TxTable(spark, path)
     t.commit(_df(spark, 1))
     rival = TxTable(spark, path)
-    real_publish = t._try_publish
+    real_publish = t._log.publish
 
     def racy_publish(entry):
         if not racy_publish.raced:
@@ -143,7 +141,7 @@ def test_lost_upgrade_race_recomputes_fresh(spark, tmp_path):
         return real_publish(entry)
 
     racy_publish.raced = False
-    t._try_publish = racy_publish
+    t._log.publish = racy_publish
     t.upgrade_protocol(min_writer=2)  # lower request, loses first attempt
     head = t.latest_version()
     entry = t._log.read_entry(head)

@@ -151,7 +151,9 @@ def test_txtable_upsert_sink_exactly_once(spark, sf_small, tmp_path):
     """streaming/sinks.txtable_upsert_sink: per-key latest state through
     txn-keyed MERGE — a deliberately double-invoked batch (the
     foreachBatch at-least-once failure mode) leaves table state
-    unchanged."""
+    unchanged. A second query stays active during the run: the txn
+    keys must still come from the given app id, not from a guess that
+    changes across restarts when several streams run."""
     from novlake_spark.streaming.sinks import txtable_upsert_sink
     from novlake_spark.txlog import TxTable
 
@@ -163,23 +165,32 @@ def test_txtable_upsert_sink_exactly_once(spark, sf_small, tmp_path):
     changes.repartition(3).write.parquet(src)
     target = str(tmp_path / "state")
 
-    sink = txtable_upsert_sink(target, key=["user_id"])
+    sink = txtable_upsert_sink(target, key=["user_id"], txn_app="state-upsert")
 
     def replaying_sink(batch_df, batch_id):
         sink(batch_df, batch_id)
         if batch_id == 1:
             sink(batch_df, batch_id)  # simulate post-failure replay
 
-    q = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(replaying_sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
+    other = (
+        spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt_other"))
         .start()
     )
-    q.awaitTermination()
+    try:
+        q = (
+            spark.readStream.schema(changes.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .writeStream.foreachBatch(replaying_sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        other.stop()
 
     t = TxTable(spark, target)
     final = t.read()
@@ -189,3 +200,4 @@ def test_txtable_upsert_sink_exactly_once(spark, sf_small, tmp_path):
     # the replayed batch produced NO extra commit
     txns = t.txn_versions()
     assert len(txns) == t.latest_version() + 1
+    assert txns and all(k.startswith("state-upsert.") for k in txns), txns

@@ -37,7 +37,7 @@ def test_append_survives_a_lost_race(spark, tmp_path):
     # simulate the race: another writer publishes version 1 between our
     # version computation and publish
     rival = TxTable(spark, str(tmp_path / "t"))
-    real_publish = t._try_publish
+    real_publish = t._log.publish
 
     def racy_publish(entry):
         if entry["version"] == 1 and not racy_publish.raced:
@@ -46,7 +46,7 @@ def test_append_survives_a_lost_race(spark, tmp_path):
         return real_publish(entry)
 
     racy_publish.raced = False
-    t._try_publish = racy_publish
+    t._log.publish = racy_publish
     v = t.commit(_df(spark, 2))
     assert v == 2  # retried into the next slot
     assert sorted(r.x for r in t.read().collect()) == [1, 2, 100]
@@ -55,7 +55,7 @@ def test_append_survives_a_lost_race(spark, tmp_path):
 def test_conflict_exhaustion_cleans_up(spark, tmp_path):
     t = TxTable(spark, str(tmp_path / "t"))
     t.commit(_df(spark, 1))
-    t._try_publish = lambda entry: False
+    t._log.publish = lambda entry: False
     with pytest.raises(CommitConflict):
         t.commit(_df(spark, 2), max_retries=2)
     # the unpublished files were deleted; the table is unchanged
@@ -260,7 +260,7 @@ def test_remove_remove_conflict_detected_on_retry(spark, tmp_path):
     t.commit(_df(spark, 2))
     files = t.snapshot_files()
     rival = TxTable(spark, str(tmp_path / "t"))
-    real_publish = t._try_publish
+    real_publish = t._log.publish
 
     def racy_publish(entry):
         if not racy_publish.raced:
@@ -269,7 +269,7 @@ def test_remove_remove_conflict_detected_on_retry(spark, tmp_path):
         return real_publish(entry)
 
     racy_publish.raced = False
-    t._try_publish = racy_publish
+    t._log.publish = racy_publish
     with pytest.raises(CommitConflict):
         t.commit(_df(spark, 1, 2), remove=files)
     assert sorted(r.x for r in t.read().collect()) == [1, 2]
@@ -281,7 +281,7 @@ def test_append_composes_across_interleaved_overwrite_free_commits(spark, tmp_pa
     t = TxTable(spark, str(tmp_path / "t"))
     t.commit(_df(spark, 1))
     rival = TxTable(spark, str(tmp_path / "t"))
-    real_publish = t._try_publish
+    real_publish = t._log.publish
 
     def racy_publish(entry):
         if not racy_publish.raced:
@@ -290,7 +290,7 @@ def test_append_composes_across_interleaved_overwrite_free_commits(spark, tmp_pa
         return real_publish(entry)
 
     racy_publish.raced = False
-    t._try_publish = racy_publish
+    t._log.publish = racy_publish
     assert t.commit(_df(spark, 2)) == 2
     assert sorted(r.x for r in t.read().collect()) == [1, 2, 100]
 

@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql.datasource import EqualTo, GreaterThan, IsNotNull
 
 from novlake_spark.sources.txlog_source import (
-    _publish_local,
     _to_predicates,
     _TxLogBatchReader,
     register_txlog_source,
@@ -86,6 +85,24 @@ def test_log_seam_follows_path_scheme(tmp_path):
     assert LogReader(f"file:{tmp_path}").versions() == []  # no _log yet
     with pytest.raises(NotImplementedError, match="remote"):
         LogReader("s3a://bucket/t")
+
+
+def test_local_log_writes_never_open_hadoop(spark, tmp_path):
+    """On a local table a metadata-only commit, a checkpoint with a
+    parquet sidecar and clean_log publish and delete through the os
+    seam: the Hadoop FileSystem (opened lazily, for data files only) is
+    never opened."""
+    path = str(tmp_path / "t")
+    TxTable(spark, path).commit(_kv(spark, 0, 10))
+    t = TxTable(spark, path)
+    t.parquet_checkpoint_rows = 1
+    v = t.add_constraint("k_nonneg", "k >= 0")
+    assert t.checkpoint() == v
+    assert os.path.exists(f"{path}/_log/checkpoint-{v}.parquet")
+    assert t.clean_log(v) == [0, 1]
+    assert t.constraints() == {"k_nonneg": "k >= 0"}
+    assert t.read().count() == 10
+    assert "_fs" not in t.__dict__
 
 
 def test_batch_read_equals_native(table):
@@ -352,16 +369,22 @@ def test_stream_sink_replayed_batch_is_noop(spark, tmp_path):
 
 
 def test_python_publish_loses_slot_to_jvm_writer(spark, tmp_path):
-    """The pure-Python claim and Hadoop's rename-no-overwrite contend on
-    the same directory entry — exactly one wins a version slot."""
+    """The os seam's hard-link claim and the Hadoop seam's
+    rename-no-overwrite contend on the same directory entry — exactly
+    one wins a version slot, neither leaves a temp file behind, and the
+    next commit lands in the slot after."""
     t = TxTable(spark, str(tmp_path / "race"))
     t.commit(_kv(spark, 0, 5))
-    log = LogReader(t.path)
-    assert _publish_local(log, {"version": 1, "mode": "append", "add": []}) is True
-    # slot 1 now taken: both a Python rival and a JVM writer must miss it
-    assert _publish_local(log, {"version": 1, "mode": "append", "add": []}) is False
-    v = t.commit(_kv(spark, 5, 10))  # JVM writer retries into slot 2
-    assert v == 2
+    os_fs, hadoop_fs = _OsFS(), _HadoopFS(spark, t.path)
+
+    def slot(v):
+        entry = {"version": v, "mode": "append", "add": []}
+        return f"{t.path}/_log/{v}.json", json.dumps(entry).encode()
+
+    assert [os_fs.claim(*slot(1)), hadoop_fs.claim(*slot(1))] == [True, False]
+    assert [hadoop_fs.claim(*slot(2)), os_fs.claim(*slot(2))] == [True, False]
+    assert os.listdir(tmp_path / "race" / "_log" / "_tmp") == []
+    assert t.commit(_kv(spark, 5, 10)) == 3  # retries past both taken slots
 
 
 def test_writer_refuses_constraint_tables(spark, tmp_path):
