@@ -512,7 +512,8 @@ class Lake:
     ):
         """CDC-replicate one transaction-logged table onto another by
         primary key — change-feed tail + idempotent ordered MERGEs; see
-        :mod:`novlake_spark.replicate`."""
+        :func:`novlake_spark.replicate.replicate`. ``checkpoint`` is used
+        only by a continuous mirror (``available_now=False``)."""
         from novlake_spark.replicate import replicate
 
         return replicate(self.spark, source_path, target_path, key, checkpoint, **kwargs)

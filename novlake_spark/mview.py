@@ -45,7 +45,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from novlake_spark.txlog import TxTable, file_matches, _stat_value
+from novlake_spark.txlog import TxTable, file_matches, source_marks, _stat_value
 
 #: Hidden column: live base-row count per group. Needed even when the
 #: user only asked for SUMs — it is what detects group death (count==0)
@@ -99,12 +99,7 @@ class IncrementalAggView:
     # -- watermark ---------------------------------------------------------
     def processed_version(self) -> int:
         """Highest source version folded into the view (-1 = none)."""
-        marks = [
-            int(t.split("@", 1)[1])
-            for t in self.view.txn_versions()
-            if t.startswith("src@")
-        ]
-        return max(marks, default=-1)
+        return max(source_marks(self.view.txn_versions(), "src"), default=-1)
 
     # -- delta computation ---------------------------------------------------
     def _delta(self, from_v: int, to_v: int):

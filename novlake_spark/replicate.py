@@ -3,65 +3,96 @@ tail the source's row-level change feed and apply it onto a target
 keyed by a primary key — the cross-region / dev-mirror / downstream-mart
 primitive (Delta calls the write half APPLY CHANGES INTO).
 
-Pipeline shape: ``readStream.format("txlog")`` with
-``readChangeFeed=true`` delivers every commit's inserts and deletes
-tagged ``(_change_type, _commit_version)``; ``foreachBatch`` applies
-them in commit order — deletes before inserts within a version, which
-is exactly the file-rewrite semantics the feed encodes (a MERGE
-surfaces as delete-of-old-rows + insert-of-new-rows in one version, so
-applying in that order converges the target even though the feed is
-file-granular and re-delivers a rewritten file's surviving rows).
+Pipeline shape: source commits apply in version order, each as two
+MERGE phases, deletes then inserts — the feed's file-rewrite semantics
+(a MERGE surfaces as delete-of-old-rows + insert-of-new-rows in one
+version, so that order converges the target although the feed
+re-delivers a rewritten file's surviving rows). A scheduled run
+(``available_now``) is a synchronous drain: it plans the change units
+past the target's watermark from the source log and reads each phase
+with a native parquet scan — no streaming query, no checkpoint. A
+continuous mirror is a ``readStream.format("txlog")`` change-feed query
+whose ``foreachBatch`` applies the same phases.
 
-Exactly-once: every applied phase commits under txn
-``<app>@<batchId>:<version>:<d|i>``. A crash mid-batch re-runs the
-batch; already-applied phases are log-detected no-ops, the rest apply —
-at-least-once delivery plus idempotent commits = exactly-once state.
+Exactly-once: every phase commits under txn ``<app>:<version>:<d|i>``,
+so the target's own log is the watermark (:func:`source_marks` also
+reads the older ``<app>@<batchId>:<version>:<d|i>`` keys). A crash
+between phases resumes at the missing one, a landed phase is skipped
+before any Spark job runs, and a stream that lost its checkpoint
+replays as no-ops.
 
-At 100 TB: each applied phase is a stats-scoped MERGE (only target
-files whose key range overlaps the delta are rewritten), and the feed
-itself is O(changed files). The replication lag floor is the trigger
-interval plus one MERGE; the bandwidth floor is the source's actual
-churn, never table size.
+At 100 TB each phase is a stats-scoped MERGE over an O(changed files)
+feed: the lag floor is the schedule interval plus one MERGE, the
+bandwidth floor the source's churn, never table size.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
-from novlake_spark.txlog import TxTable
+from novlake_spark.txlog import TxTable, plan_changes, source_marks
 
 _META = ("_change_type", "_commit_version")
 
 
-def apply_changes(
-    spark: SparkSession,
-    target_path: str,
-    batch_df,
-    batch_id: int,
-    key: list[str],
-    txn_app: str,
-) -> None:
+def _merge_phase(t: TxTable, rows, key: list[str], txn_app: str, version: int, phase: str):
+    """MERGE one source version's non-empty delete (``phase="d"``) or
+    insert (``"i"``) rows onto ``t`` under txn ``<app>:<version>:<phase>``."""
+    if phase == "i" or t.latest_version() is not None:  # else nothing to delete
+        t.merge(rows, key, delete_matched=phase == "d", txn=f"{txn_app}:{version}:{phase}")
+
+
+def apply_changes(spark: SparkSession, target_path: str, batch_df, key: list[str], txn_app: str):
     """Apply one micro-batch of change-feed rows onto ``target_path``.
     Public so a user's own ``foreachBatch`` can compose it with other
     work; :func:`replicate` is the turnkey wrapper."""
-    # bounded collect: one row per source commit in this batch
-    versions = sorted(
-        r[0] for r in batch_df.select("_commit_version").distinct().collect()
-    )
     t = TxTable(spark, target_path)
-    for v in versions:
-        part = batch_df.filter(F.col("_commit_version") == v)
-        dels = part.filter(F.col("_change_type") == "delete").drop(*_META)
-        ins = part.filter(F.col("_change_type") == "insert").drop(*_META)
-        # .take(1) guards: MERGE with an empty source would still scope
-        # ALL files (no key bounds) and rewrite the table as a no-op
-        if t.latest_version() is not None and dels.take(1):
-            t.merge(
-                dels, key, delete_matched=True, txn=f"{txn_app}@{batch_id}:{v}:d"
-            )
-        if ins.take(1):
-            t.merge(ins, key, txn=f"{txn_app}@{batch_id}:{v}:i")
+    done = source_marks(t.txn_versions(), txn_app)
+    # bounded collect: at most two rows per source commit in this batch;
+    # sorted, each version's deletes come before its inserts
+    for v, ctype in sorted(batch_df.select(*reversed(_META)).distinct().collect()):
+        if ctype[0] not in done.get(v, ()):
+            rows = batch_df.where(f"_commit_version = {v} AND _change_type = '{ctype}'")
+            _merge_phase(t, rows.drop(*_META), key, txn_app, v, ctype[0])
+
+
+def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[str], txn_app: str):
+    """Apply every source commit past the target's watermark."""
+    src, t = TxTable(spark, source_path), TxTable(spark, target_path)
+    done = source_marks(t.txn_versions(), txn_app)
+    processed = max(done, default=-1)
+    # re-visit the newest marked version unless its insert phase landed:
+    # a crash between its delete and insert phases resumes there
+    start = processed if "i" in done.get(processed, ()) else max(processed - 1, -1)
+    head = src.latest_version()
+    phases: dict[tuple[int, str], list] = {}
+    for u in plan_changes(src._log, start, start if head is None else head):
+        phases.setdefault((u.version, u.change_type[0]), []).append(u)
+    # sorted keys put each version's "d" phase before its "i" phase
+    for (v, phase), units in sorted(phases.items()):
+        if phase not in done.get(v, ()):
+            rows = src._read_units(units, start).drop(*_META)
+            # units can still yield no rows (all DV'd), and a MERGE with
+            # an empty source would scope ALL files and rewrite them
+            if rows.take(1):
+                _merge_phase(t, rows, key, txn_app, v, phase)
+
+
+class Drained:
+    """What ``replicate(available_now=True)`` returns: the StreamingQuery
+    calls a scheduled caller makes, for a drain that already finished."""
+
+    isActive = False
+    recentProgress = property(lambda self: [])
+
+    def awaitTermination(self, timeout: float | None = None) -> bool | None:
+        return None if timeout is None else True
+
+    def stop(self) -> None:
+        pass
+
+    def exception(self) -> None:
+        return None
 
 
 def replicate(
@@ -73,27 +104,28 @@ def replicate(
     txn_app: str | None = None,
     available_now: bool = True,
 ):
-    """Start (or resume, via ``checkpoint``) replicating ``source_path``
-    onto ``target_path``. Returns the StreamingQuery; with
-    ``available_now`` it drains the current backlog and stops — call it
-    on a schedule for batch-incremental replication, or pass ``False``
-    for a continuously-running mirror."""
+    """Replicate ``source_path`` onto ``target_path``. With
+    ``available_now`` it drains the current backlog synchronously and
+    returns a finished :class:`Drained` handle — call it on a schedule
+    for batch-incremental replication; a failed drain raises here, and
+    the next call resumes it exactly once. ``available_now=False`` starts
+    (or resumes, via ``checkpoint``) a continuously-running mirror and
+    returns its StreamingQuery; ``checkpoint`` is used only there."""
+    app = txn_app or f"repl:{target_path.rstrip('/')}"
+    if available_now:
+        _drain(spark, source_path, target_path, key, app)
+        return Drained()
     from novlake_spark.sources.txlog_source import register_txlog_source
 
     register_txlog_source(spark)
-    app = txn_app or f"repl:{target_path.rstrip('/')}"
-
-    def _apply(batch_df, batch_id: int) -> None:
-        apply_changes(spark, target_path, batch_df, batch_id, key, app)
-
-    writer = (
+    return (
         spark.readStream.format("txlog")
         .option("path", source_path)
         .option("readChangeFeed", "true")
         .load()
-        .writeStream.foreachBatch(_apply)
+        .writeStream.foreachBatch(
+            lambda batch_df, _: apply_changes(spark, target_path, batch_df, key, app)
+        )
         .option("checkpointLocation", checkpoint)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

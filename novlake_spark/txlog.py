@@ -51,6 +51,7 @@ import hashlib
 import json
 import logging
 import os
+import re
 import time
 import uuid
 from typing import NamedTuple
@@ -691,7 +692,15 @@ def plan_changes(log: LogReader, from_v: int, to_v: int) -> list[ChangeUnit]:
     reported deleted when the DV landed); an added file's insert
     excludes the DV it carries (RESTORE re-publishes vectored adds). The
     prior snapshot is folded only once a commit needs it, then rolled
-    forward entry by entry — a pure-append window never folds state."""
+    forward entry by entry — a pure-append window never folds state.
+    Every entry of the window must be retained (``clean_log`` horizon)."""
+    have = set(log.versions())
+    missing = [v for v in range(from_v + 1, to_v + 1) if v not in have]
+    if missing:
+        raise ValueError(
+            f"log entries {missing} no longer exist (clean_log horizon); "
+            "change feed unavailable below the retained tail"
+        )
     units: list[ChangeUnit] = []
     live: list[dict] | None = None  # snapshot before commit v, once needed
     for v in range(from_v + 1, to_v + 1):
@@ -738,6 +747,22 @@ def appended_units(units: list[ChangeUnit], ignore_changes: bool, hint: str) -> 
                     f"overwrites or deletion-vectors rows); {hint}"
                 )
     return [u for u in units if u.change_type == "insert"]
+
+
+_SOURCE_MARK = re.compile(r"(?:@\d+)?:(\d+):([di])|@(\d+)")
+
+
+def source_marks(txns, app: str) -> dict[int, set[str]]:
+    """Source versions that ``app``'s txn ids (Delta's transaction
+    identifiers) mark as landed, each with its phases: ``"d"``/``"i"``
+    from a replica's ``<app>:<v>:<d|i>`` (or older batch-keyed
+    ``<app>@<batch>:<v>:<d|i>``), ``""`` from a view's ``<app>@<v>``.
+    The highest key is the consumer's watermark."""
+    out: dict[int, set[str]] = {}
+    for t in txns:
+        if t.startswith(app) and (m := _SOURCE_MARK.fullmatch(t, len(app))):
+            out.setdefault(int(m[1] or m[3]), set()).add(m[2] or "")
+    return out
 
 
 # Column types that get min/max stats in add actions. Decimals are
@@ -2246,13 +2271,6 @@ class TxTable:
         if latest is None:
             raise FileNotFoundError(f"no committed data under {self.path}")
         upto = latest if to_version is None else to_version
-        have = set(self.versions())
-        missing = [v for v in range(from_version + 1, upto + 1) if v not in have]
-        if missing:
-            raise ValueError(
-                f"log entries {missing} no longer exist (clean_log horizon); "
-                "change feed unavailable below the retained tail"
-            )
         df = self._read_units(plan_changes(self._log, from_version, upto), from_version)
         if df is not None:
             return df

@@ -93,11 +93,11 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     src.delete([("k", "<", 3)])
     dst_path = str(tmp_path / "dst")
     changes = src.changes(-1)
-    apply_changes(spark, dst_path, changes, 0, ["k"], "app")
+    apply_changes(spark, dst_path, changes, ["k"], "app")
     dst = TxTable(spark, dst_path)
     state = _rows(dst)
     versions = dst.versions()
-    apply_changes(spark, dst_path, changes, 0, ["k"], "app")  # replay
+    apply_changes(spark, dst_path, changes, ["k"], "app")  # replay
     assert _rows(dst) == state
     assert dst.versions() == versions
 
@@ -112,3 +112,118 @@ def test_lake_facade(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert TxTable(spark, str(tmp_path / "dst")).read().count() == 10
+
+
+def test_crash_between_phases_resumes_exactly_once(spark, tmp_path, monkeypatch):
+    """A drain that dies after a version's delete phase landed, before
+    its insert phase, resumes at the insert phase: the target converges
+    and every ``<app>:<version>:<d|i>`` phase commits exactly once."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 20))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    src.merge(_kv(spark, 5, 25, mul=7), key=["k"])  # version 1: delete + insert
+    merge = TxTable.merge
+
+    def crash(self, source, key, delete_matched=False, txn=None, **kw):
+        if txn is not None and txn.endswith(":1:i"):
+            raise RuntimeError("crash before the insert phase")
+        return merge(self, source, key, delete_matched=delete_matched, txn=txn, **kw)
+
+    monkeypatch.setattr(TxTable, "merge", crash)
+    with pytest.raises(RuntimeError, match="crash before the insert phase"):
+        _pump(spark, src.path, dst_path, cp)
+    dst = TxTable(spark, dst_path)
+    assert _rows(dst) != _rows(src)  # the delete phase landed alone
+    monkeypatch.undo()
+    _pump(spark, src.path, dst_path, cp)
+    assert _rows(dst) == _rows(src)
+    app = f"repl:{dst_path}"
+    want = [f"{app}:0:i", f"{app}:1:d", f"{app}:1:i"]
+    assert sorted(dst.txn_versions()) == want
+    assert sorted(dst._log.read_entry(v).get("txn") for v in dst.versions()) == want
+
+
+def test_switch_from_batch_keyed_stream(spark, tmp_path):
+    """A target fed by the older stream, whose phases carry the batch id
+    (``<app>@<batch>:<version>:<d|i>``), switches to the drain without
+    re-applying what it holds; later source commits apply exactly once."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    dst = TxTable(spark, str(tmp_path / "dst"))
+    for batch, lo in enumerate((0, 10)):
+        v = src.commit(_kv(spark, lo, lo + 10))
+        dst.commit(src.changes(v - 1, v).drop("_change_type", "_commit_version"),
+                   txn=f"app@{batch}:{v}:i")
+    before = dst.versions()
+
+    def drain():
+        replicate(spark, src.path, dst.path, key=["k"],
+                  checkpoint=str(tmp_path / "fresh_cp"), txn_app="app").awaitTermination(180)
+
+    drain()
+    assert dst.versions() == before
+    src.commit(_kv(spark, 20, 30))
+    drain()
+    drain()
+    assert len(dst.versions()) == len(before) + 1
+    assert _rows(dst) == _rows(src)
+    assert "app:2:i" in dst.txn_versions()
+
+
+def test_drain_handle_starts_no_query_and_idles_without_jobs(spark, tmp_path):
+    """``available_now`` returns a finished handle with no streaming
+    query left behind, and a drain with nothing new runs no Spark job."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 10))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    q = replicate(spark, src.path, dst_path, key=["k"], checkpoint=cp)
+    assert spark.streams.active == []
+    assert q.awaitTermination(180) is True and q.recentProgress == []
+    assert not q.isActive and q.exception() is None
+    sc = spark.sparkContext
+    sc.setJobGroup("idle-drain", "replicate with nothing new")
+    try:
+        replicate(spark, src.path, dst_path, key=["k"], checkpoint=cp).awaitTermination(180)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("idle-drain") == []
+    assert _rows(TxTable(spark, dst_path)) == _rows(src)
+
+
+def test_stream_mirror_keys_phases_by_version(spark, tmp_path):
+    """The continuously-running mirror commits under the drain's
+    ``<app>:<version>:<d|i>`` keys, so a drain after it finds nothing."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 10).coalesce(1))
+    src.delete([("k", "<", 3)])  # rewrites the one file: delete + insert
+    dst = TxTable(spark, str(tmp_path / "dst"))
+    cp = str(tmp_path / "cp")
+    q = replicate(spark, src.path, dst.path, key=["k"], checkpoint=cp,
+                  txn_app="app", available_now=False)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert _rows(dst) == _rows(src)
+    assert sorted(dst.txn_versions()) == ["app:0:i", "app:1:d", "app:1:i"]
+    before = dst.versions()
+    replicate(spark, src.path, dst.path, key=["k"], checkpoint=cp, txn_app="app")
+    assert dst.versions() == before
+
+
+def test_drain_below_clean_log_horizon_raises(spark, tmp_path):
+    """A replica whose watermark fell below the source's ``clean_log``
+    horizon cannot catch up from the log: the drain raises the change
+    feed's own error instead of skipping the cleaned versions."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 10))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    src.commit(_kv(spark, 10, 20))
+    src.commit(_kv(spark, 20, 30))
+    src.checkpoint(2)
+    src.clean_log(2)
+    with pytest.raises(ValueError, match="clean_log horizon"):
+        _pump(spark, src.path, dst_path, cp)
+    with pytest.raises(ValueError, match="clean_log horizon"):
+        src.changes(0)
