@@ -19,7 +19,10 @@ so the target's own log is the watermark (:func:`source_marks` also
 reads the older ``<app>@<batchId>:<version>:<d|i>`` keys). A crash
 between phases resumes at the missing one, a landed phase is skipped
 before any Spark job runs, and a stream that lost its checkpoint
-replays as no-ops.
+replays as no-ops. A drain whose source head inserted nothing (a
+deletion-vector DELETE, a constraint, ANALYZE) ends with a row-free
+commit of ``<app>:<head>:i``, so the watermark reaches the head and
+a ``clean_log`` of the source up to it never strands the replica.
 
 At 100 TB each phase is a stats-scoped MERGE over an O(changed files)
 feed: the lag floor is the schedule interval plus one MERGE, the
@@ -27,6 +30,8 @@ bandwidth floor the source's churn, never table size.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -42,22 +47,38 @@ def _merge_phase(t: TxTable, rows, key: list[str], txn_app: str, version: int, p
         t.merge(rows, key, delete_matched=phase == "d", txn=f"{txn_app}:{version}:{phase}")
 
 
+def _apply_phases(t: TxTable, done: dict[int, set[str]], phases: dict, key: list[str], txn_app: str):
+    """MERGE each ``(version, phase)`` of ``phases`` not yet in ``done``
+    (the target's :func:`source_marks`) in version order, each version's
+    ``"d"`` before its ``"i"``, and record it in ``done``. ``phases``
+    maps the pair to a function building its rows (None: no rows)."""
+    for v, phase in sorted(phases):
+        if phase not in done.get(v, ()):
+            rows = phases[v, phase]()
+            if rows is not None:
+                _merge_phase(t, rows, key, txn_app, v, phase)
+            done.setdefault(v, set()).add(phase)
+
+
 def apply_changes(spark: SparkSession, target_path: str, batch_df, key: list[str], txn_app: str):
     """Apply one micro-batch of change-feed rows onto ``target_path``.
     Public so a user's own ``foreachBatch`` can compose it with other
     work; :func:`replicate` is the turnkey wrapper."""
     t = TxTable(spark, target_path)
-    done = source_marks(t.txn_versions(), txn_app)
-    # bounded collect: at most two rows per source commit in this batch;
-    # sorted, each version's deletes come before its inserts
-    for v, ctype in sorted(batch_df.select(*reversed(_META)).distinct().collect()):
-        if ctype[0] not in done.get(v, ()):
-            rows = batch_df.where(f"_commit_version = {v} AND _change_type = '{ctype}'")
-            _merge_phase(t, rows.drop(*_META), key, txn_app, v, ctype[0])
+    # bounded collect: at most two rows per source commit in this batch
+    pairs = batch_df.select(*reversed(_META)).distinct().collect()
+    phases = {
+        (v, c[0]): lambda q=f"_commit_version = {v} AND _change_type = '{c}'": (
+            batch_df.where(q).drop(*_META)
+        )
+        for v, c in pairs
+    }
+    _apply_phases(t, source_marks(t.txn_versions(), txn_app), phases, key, txn_app)
 
 
 def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[str], txn_app: str):
-    """Apply every source commit past the target's watermark."""
+    """Apply every source commit past the target's watermark, then mark
+    the source head as applied."""
     src, t = TxTable(spark, source_path), TxTable(spark, target_path)
     done = source_marks(t.txn_versions(), txn_app)
     processed = max(done, default=-1)
@@ -65,17 +86,33 @@ def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[st
     # a crash between its delete and insert phases resumes there
     start = processed if "i" in done.get(processed, ()) else max(processed - 1, -1)
     head = src.latest_version()
-    phases: dict[tuple[int, str], list] = {}
-    for u in plan_changes(src._log, start, start if head is None else head):
-        phases.setdefault((u.version, u.change_type[0]), []).append(u)
-    # sorted keys put each version's "d" phase before its "i" phase
-    for (v, phase), units in sorted(phases.items()):
-        if phase not in done.get(v, ()):
-            rows = src._read_units(units, start).drop(*_META)
-            # units can still yield no rows (all DV'd), and a MERGE with
-            # an empty source would scope ALL files and rewrite them
-            if rows.take(1):
-                _merge_phase(t, rows, key, txn_app, v, phase)
+    if head is None:
+        return
+    units: dict[tuple[int, str], list] = {}
+    for u in plan_changes(src._log, start, head):
+        units.setdefault((u.version, u.change_type[0]), []).append(u)
+
+    def rows(phase_units):
+        df = src._read_units(phase_units, start).drop(*_META)
+        # units can still yield no rows (all DV'd), and a MERGE with an
+        # empty source would scope ALL files and rewrite them
+        return df if df.take(1) else None
+
+    _apply_phases(t, done, {p: partial(rows, us) for p, us in units.items()}, key, txn_app)
+    if "i" not in done.get(head, ()):
+        _mark_applied(src, t, head, f"{txn_app}:{head}:i")
+
+
+def _mark_applied(src: TxTable, t: TxTable, head: int, txn: str):
+    """Commit ``txn`` onto ``t`` without rows. A source head that inserts
+    nothing (deletes only, or metadata only) still moves the target's
+    watermark to it, so a ``clean_log`` of the source up to its head
+    never leaves the replica's next window below the horizon."""
+    if t.latest_version() is None:  # nothing landed yet: an empty replica
+        t.commit(src.read(head).limit(0), txn=txn)
+    else:
+        t._publish_meta(lambda v: {"version": v, "mode": "append", "add": [],
+                                   "remove": [], "txn": txn, "op": "SET TRANSACTION"})
 
 
 class Drained:

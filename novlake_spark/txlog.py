@@ -694,17 +694,18 @@ def plan_changes(log: LogReader, from_v: int, to_v: int) -> list[ChangeUnit]:
     prior snapshot is folded only once a commit needs it, then rolled
     forward entry by entry — a pure-append window never folds state.
     Every entry of the window must be retained (``clean_log`` horizon)."""
-    have = set(log.versions())
-    missing = [v for v in range(from_v + 1, to_v + 1) if v not in have]
-    if missing:
-        raise ValueError(
-            f"log entries {missing} no longer exist (clean_log horizon); "
-            "change feed unavailable below the retained tail"
-        )
     units: list[ChangeUnit] = []
     live: list[dict] | None = None  # snapshot before commit v, once needed
     for v in range(from_v + 1, to_v + 1):
-        e = log.read_entry(v)
+        try:
+            e = log.read_entry(v)
+        except Exception as exc:
+            if not _missing_file(exc):
+                raise
+            raise ValueError(
+                f"log entry {v} no longer exists (clean_log horizon); "
+                "change feed unavailable below the retained tail"
+            ) from exc
         set_dv = e.get("set_dv") or {}
         if e["mode"] == "overwrite" or e.get("remove") or set_dv:
             if live is None:

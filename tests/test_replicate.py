@@ -227,3 +227,55 @@ def test_drain_below_clean_log_horizon_raises(spark, tmp_path):
         _pump(spark, src.path, dst_path, cp)
     with pytest.raises(ValueError, match="clean_log horizon"):
         src.changes(0)
+
+
+@pytest.mark.parametrize("head_op", ["dv_delete", "metadata"])
+def test_drain_to_rowless_head_survives_clean_log(spark, tmp_path, head_op):
+    """A source head that inserts nothing — a deletion-vector DELETE (a
+    delete phase only) or a metadata-only commit (no phase at all) —
+    still moves the replica's watermark to it: a ``clean_log`` of the
+    source at its head leaves the next drains working, each source
+    change applied exactly once."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 20))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    if head_op == "dv_delete":
+        src.delete([("k", "<", 5)], dv=True)
+    else:
+        src.add_constraint("k_nonneg", "k >= 0")
+    _pump(spark, src.path, dst_path, cp)
+    dst = TxTable(spark, dst_path)
+    assert _rows(dst) == _rows(src)
+    head = src.latest_version()
+    src.checkpoint(head)
+    src.clean_log(head)
+    before = dst.versions()
+    _pump(spark, src.path, dst_path, cp)
+    assert dst.versions() == before
+    v = src.commit(_kv(spark, 20, 30))
+    _pump(spark, src.path, dst_path, cp)
+    _pump(spark, src.path, dst_path, cp)
+    assert len(dst.versions()) == len(before) + 1
+    assert _rows(dst) == _rows(src)
+    app = f"repl:{dst_path}"
+    assert dst.txn_versions()[f"{app}:{v}:i"] == dst.latest_version()
+    txns = [dst._log.read_entry(u).get("txn") for u in dst.versions()]
+    assert len(txns) == len(set(txns)) and f"{app}:{head}:i" in txns
+
+
+def test_drain_of_rowless_source_creates_empty_replica(spark, tmp_path):
+    """A source whose commits hold no rows yields an empty replica with
+    the source's schema, marked at the source head."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 0))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    dst = TxTable(spark, dst_path)
+    assert dst.read().columns == ["k", "v"] and _rows(dst) == []
+    assert dst.txn_versions() == {f"repl:{dst_path}:0:i": 0}
+    src.checkpoint(0)
+    src.clean_log(0)
+    src.commit(_kv(spark, 0, 5))
+    _pump(spark, src.path, dst_path, cp)
+    assert _rows(dst) == _rows(src)
