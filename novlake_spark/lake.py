@@ -497,8 +497,8 @@ class Lake:
         return Catalog(self.spark, root)
 
     def analyze_table(self, path: str, bloom_cols: list[str] | None = None) -> int:
-        """ANALYZE a transaction-logged table: retrofit min/max stats and
-        requested Bloom filters onto files lacking them, metadata-only —
+        """ANALYZE a transaction-logged table: retrofit min/max stats, null
+        counts and requested Bloom filters onto files lacking them, metadata-only —
         see :meth:`TxTable.analyze`."""
         return self.tx(path).analyze(bloom_cols=bloom_cols)
 

@@ -39,13 +39,21 @@ source high-water mark rides the view's own transaction log (and its
 checkpoints), so a crashed/re-run refresh is a no-op instead of
 double-counting. The refresh commit itself is stats-scoped like MERGE:
 only view files whose group-key range overlaps the delta are rewritten.
+That range comes from the log, not from Spark: the change units' add
+actions carry row counts, min/max and null counts per file
+(:func:`~novlake_spark.txlog.unit_bounds`), which bound the delta's
+keys at least as widely as the delta itself. A bounds aggregate over
+the delta runs only when some file lacks those stats (an older log, the
+Python writer), and the delta is executed once, inside the commit.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from novlake_spark.txlog import TxTable, file_matches, source_marks, _stat_value
+from novlake_spark.txlog import (
+    TxTable, _stat_value, file_matches, plan_changes, source_marks, unit_bounds,
+)
 
 #: Hidden column: live base-row count per group. Needed even when the
 #: user only asked for SUMs — it is what detects group death (count==0)
@@ -102,15 +110,16 @@ class IncrementalAggView:
         return max(source_marks(self.view.txn_versions(), "src"), default=-1)
 
     # -- delta computation ---------------------------------------------------
-    def _delta(self, from_v: int, to_v: int):
-        """Signed per-group delta over source versions (from_v, to_v].
+    def _delta(self, units, from_v: int, to_v: int):
+        """Signed per-group delta of the change ``units`` of source
+        versions (from_v, to_v].
 
         For MIN/MAX measures two columns come back per measure: the
         insert-side extremum under the measure's own name (what a pure
         fold would apply) and the delete-side extremum under
         ``__dx_<name>`` (what decides whether the fold is SOUND for the
         group — see :meth:`refresh`)."""
-        ch = self.source.changes(from_v, to_v)
+        ch = self.source._changes_frame(units, from_v, to_v)
         is_ins = F.col("_change_type") == "insert"
         w = F.when(is_ins, F.lit(1)).otherwise(F.lit(-1))
         aggs = [F.sum(w).alias(_N)]
@@ -178,12 +187,19 @@ class IncrementalAggView:
         returns the view version committed (None = already current).
         O(delta + overlapping view files + rows of groups whose MIN/MAX
         extremum died), never a base-table scan.
+
+        The window is planned once (:func:`plan_changes`). Whether it
+        holds any row, and the leading key's range and null count that
+        scope the view rewrite, come from the units' file stats; a
+        Spark aggregate over the delta answers only when a file lacks
+        them.
         """
         last = self.processed_version()
         latest = self.source.latest_version()
         if latest is None or latest <= last:
             return None
-        delta = self._delta(last, latest)
+        units = plan_changes(self.source._log, last, latest)
+        delta = self._delta(units, last, latest)
         txn = f"src@{latest}"
 
         base = self.view.latest_version()
@@ -204,25 +220,29 @@ class IncrementalAggView:
             # range overlaps the delta's are read and replaced
             adds = self.view.snapshot_adds(base)
             k0 = self.keys[0]
-            bounds = delta.agg(
-                F.min(k0).alias("lo"),
-                F.max(k0).alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col(k0).isNull().cast("int")).alias("nulls"),
-            ).collect()[0]
-            if bounds["n"] == 0:  # no groups changed at all
+            # the window's rows and key bounds, from the units' file stats
+            has_rows, bounds = unit_bounds(units, k0, self.source.schema_at(latest))
+            if has_rows is None or bounds is None:
+                # a file without row counts, stats or null counts: ask Spark
+                b = delta.agg(
+                    F.min(k0).alias("lo"),
+                    F.max(k0).alias("hi"),
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col(k0).isNull().cast("int")).alias("nulls"),
+                ).collect()[0]
+                has_rows = b["n"] > 0
+                bounds = _stat_value(b["lo"]), _stat_value(b["hi"]), b["nulls"]
+            lo, hi, nulls = bounds
+            if not has_rows:  # no groups changed at all
                 empty = self.view.read(base).limit(0)
                 return self.view.commit(empty, mode="append", txn=txn, base_version=base)
-            if bounds["nulls"]:
+            if nulls or lo is None:
                 # null group keys are invisible to min/max stats — a file
                 # holding the null group can't be proven untouched, so scope
                 # to everything (rare: a null group key is usually a bug)
                 touched = list(adds)
             else:
-                preds = [
-                    (k0, ">=", _stat_value(bounds["lo"])),
-                    (k0, "<=", _stat_value(bounds["hi"])),
-                ]
+                preds = [(k0, ">=", lo), (k0, "<=", hi)]
                 touched = [a for a in adds if file_matches(a, preds)]
             if touched:
                 # via _read_adds so the view table's schema contract (and a

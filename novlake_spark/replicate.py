@@ -10,9 +10,15 @@ version, so that order converges the target although the feed
 re-delivers a rewritten file's surviving rows). A scheduled run
 (``available_now``) is a synchronous drain: it plans the change units
 past the target's watermark from the source log and reads each phase
-with a native parquet scan — no streaming query, no checkpoint. A
-continuous mirror is a ``readStream.format("txlog")`` change-feed query
-whose ``foreachBatch`` applies the same phases.
+with a native parquet scan — no streaming query, no checkpoint. The
+units' file stats in the log say whether a phase holds rows and bound
+its leading key for MERGE's file scoping, so a phase runs one Spark job,
+its write; a guard or bounds job runs only for files without those
+stats (an older log, the Python writer). A replica with no mark yet, of
+a source whose log no longer holds version 0, starts from the source's
+head snapshot under ``<app>:<head>:i``. A continuous mirror is a
+``readStream.format("txlog")`` change-feed query whose ``foreachBatch``
+applies the same phases.
 
 Exactly-once: every phase commits under txn ``<app>:<version>:<d|i>``,
 so the target's own log is the watermark (:func:`source_marks` also
@@ -35,28 +41,27 @@ from functools import partial
 
 from pyspark.sql import SparkSession
 
-from novlake_spark.txlog import TxTable, plan_changes, source_marks
+from novlake_spark.txlog import TxTable, plan_changes, source_marks, unit_bounds
 
 _META = ("_change_type", "_commit_version")
-
-
-def _merge_phase(t: TxTable, rows, key: list[str], txn_app: str, version: int, phase: str):
-    """MERGE one source version's non-empty delete (``phase="d"``) or
-    insert (``"i"``) rows onto ``t`` under txn ``<app>:<version>:<phase>``."""
-    if phase == "i" or t.latest_version() is not None:  # else nothing to delete
-        t.merge(rows, key, delete_matched=phase == "d", txn=f"{txn_app}:{version}:{phase}")
 
 
 def _apply_phases(t: TxTable, done: dict[int, set[str]], phases: dict, key: list[str], txn_app: str):
     """MERGE each ``(version, phase)`` of ``phases`` not yet in ``done``
     (the target's :func:`source_marks`) in version order, each version's
-    ``"d"`` before its ``"i"``, and record it in ``done``. ``phases``
-    maps the pair to a function building its rows (None: no rows)."""
+    ``"d"`` before its ``"i"``, under txn ``<app>:<version>:<phase>``,
+    and record it in ``done``. ``phases`` maps the pair to a function
+    building ``(rows, key_range)``: non-empty rows and the ``(lo, hi)``
+    bounds of their leading key (None: MERGE computes them), or None
+    when the phase has no rows."""
     for v, phase in sorted(phases):
         if phase not in done.get(v, ()):
-            rows = phases[v, phase]()
-            if rows is not None:
-                _merge_phase(t, rows, key, txn_app, v, phase)
+            built = phases[v, phase]()
+            # a delete phase onto a target that does not exist has nothing to delete
+            if built is not None and (phase == "i" or t.latest_version() is not None):
+                rows, key_range = built
+                t._merge(rows, key_range, key, delete_matched=phase == "d",
+                         txn=f"{txn_app}:{v}:{phase}")
             done.setdefault(v, set()).add(phase)
 
 
@@ -69,7 +74,7 @@ def apply_changes(spark: SparkSession, target_path: str, batch_df, key: list[str
     pairs = batch_df.select(*reversed(_META)).distinct().collect()
     phases = {
         (v, c[0]): lambda q=f"_commit_version = {v} AND _change_type = '{c}'": (
-            batch_df.where(q).drop(*_META)
+            batch_df.where(q).drop(*_META), None
         )
         for v, c in pairs
     }
@@ -78,7 +83,9 @@ def apply_changes(spark: SparkSession, target_path: str, batch_df, key: list[str
 
 def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[str], txn_app: str):
     """Apply every source commit past the target's watermark, then mark
-    the source head as applied."""
+    the source head as applied. A replica with no mark yet, of a source
+    whose log no longer holds version 0 (``clean_log``), starts from the
+    source's head snapshot instead."""
     src, t = TxTable(spark, source_path), TxTable(spark, target_path)
     done = source_marks(t.txn_versions(), txn_app)
     processed = max(done, default=-1)
@@ -88,17 +95,28 @@ def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[st
     head = src.latest_version()
     if head is None:
         return
-    units: dict[tuple[int, str], list] = {}
-    for u in plan_changes(src._log, start, head):
-        units.setdefault((u.version, u.change_type[0]), []).append(u)
+    if not done and src.versions()[:1] != [0]:
+        phases = {(head, "i"): lambda: (src.read(head), None)}
+    else:
+        units: dict[tuple[int, str], list] = {}
+        for u in plan_changes(src._log, start, head):
+            units.setdefault((u.version, u.change_type[0]), []).append(u)
+        schema = src.schema_at(head)
 
-    def rows(phase_units):
-        df = src._read_units(phase_units, start).drop(*_META)
-        # units can still yield no rows (all DV'd), and a MERGE with an
-        # empty source would scope ALL files and rewrite them
-        return df if df.take(1) else None
+        def rows(phase_units):
+            # units can yield no rows (all DV'd), and a MERGE with an empty
+            # source would scope ALL files and rewrite them: the log's row
+            # counts say so, and take(1) only where a file has none
+            has_rows, bounds = unit_bounds(phase_units, key[0], schema)
+            if has_rows is False:
+                return None
+            df = src._read_units(phase_units, start).drop(*_META)
+            if has_rows is None and not df.take(1):
+                return None
+            return df, None if bounds is None else bounds[:2]
 
-    _apply_phases(t, done, {p: partial(rows, us) for p, us in units.items()}, key, txn_app)
+        phases = {p: partial(rows, us) for p, us in units.items()}
+    _apply_phases(t, done, phases, key, txn_app)
     if "i" not in done.get(head, ()):
         _mark_applied(src, t, head, f"{txn_app}:{head}:i")
 

@@ -418,6 +418,23 @@ def _resolve(vs: list[int], cps: list[int], version: int | None) -> int | None:
     return version
 
 
+def _tail(vs: list[int], cp: int | None, upto: int) -> list[int]:
+    """The listed entry versions a fold past checkpoint ``cp`` (None:
+    from version 0) up to ``upto`` replays. They must be contiguous: a
+    listing taken mid-``clean_log`` can show neither the old nor the new
+    checkpoint and only part of the entries, and folding that would
+    drop every cleaned entry's adds. The gap raises a missing-file error
+    so :func:`_retry_missing` re-lists."""
+    tail = [v for v in vs if (cp is None or v > cp) and v <= upto]
+    first = 0 if cp is None else cp + 1
+    if tail != list(range(first, upto + 1)):
+        raise FileNotFoundError(
+            f"log entries {first}..{upto} not all listed (listed {tail[:3]}...); "
+            "a concurrent clean_log, or the log is damaged"
+        )
+    return tail
+
+
 class LogReader:
     """Reads one table's ``_log/`` and publishes its commits: listing,
     the immutable-entry cache, JSON and parquet-sidecar checkpoint
@@ -550,7 +567,7 @@ class LogReader:
         constraints = dict(doc.get("constraints", {}))
         protocol = dict(doc.get("protocol", protocol))
         identity = dict(doc.get("identity", {}))
-        entries = [self.read_entry(v) for v in vs if (cp is None or v > cp) and v <= upto]
+        entries = [self.read_entry(v) for v in _tail(vs, cp, upto)]
         for e in entries:
             if "schema" in e:
                 schema_json = e["schema"]
@@ -748,6 +765,44 @@ def appended_units(units: list[ChangeUnit], ignore_changes: bool, hint: str) -> 
                     f"overwrites or deletion-vectors rows); {hint}"
                 )
     return [u for u in units if u.change_type == "insert"]
+
+
+def unit_bounds(
+    units: list[ChangeUnit], col: str, schema: T.StructType | None
+) -> tuple[bool | None, tuple | None]:
+    """What the log's file stats say about change units, with no Spark
+    job: ``(has_rows, (lo, hi, nulls))`` for logical column ``col``
+    (stats are keyed by physical name, so ``schema`` maps it).
+
+    ``has_rows`` is None when no unit is known to hold a row and some
+    file has no row count: an ``exclude`` unit holds its file's rows
+    less its distinct DV positions, an ``only`` unit exactly its
+    positions. The bounds are None when some file lacks min/max or a
+    null count for ``col`` (a file written before null counts were
+    recorded, or by a writer that records none); callers then run their
+    Spark job. A unit holds a subset of its file's rows, so whole-file
+    bounds contain the units' own and ``nulls == 0`` proves no unit
+    row is null; ``lo``/``hi`` are None when no file holds a value."""
+    phys = _phys_map(schema).get(col, col)
+    counts = [
+        len(set(u.dv)) if u.dv_mode == "only"
+        else None if u.add.get("rows") is None
+        else u.add["rows"] - len(set(u.dv))
+        for u in units
+    ]
+    has_rows = True if any(n for n in counts) else None if None in counts else False
+    lo = hi = None
+    nulls = 0
+    for u in units:
+        stats, counted = u.add.get("stats") or {}, u.add.get("nulls") or {}
+        if phys not in stats or phys not in counted:
+            return has_rows, None
+        f_lo, f_hi = stats[phys]
+        if f_lo is not None:
+            lo = f_lo if lo is None or f_lo < lo else lo
+            hi = f_hi if hi is None or f_hi > hi else hi
+        nulls += counted[phys]
+    return has_rows, (lo, hi, nulls)
 
 
 _SOURCE_MARK = re.compile(r"(?:@\d+)?:(\d+):([di])|@(\d+)")
@@ -1009,7 +1064,9 @@ def check_schema(
 
 def _decode_checkpoint_parquet(data: bytes) -> list[dict]:
     """Rebuild add-action dicts from a parquet checkpoint sidecar's
-    bytes (shared by the JVM-FS and pure-Python read paths)."""
+    bytes (shared by the JVM-FS and pure-Python read paths). A sidecar
+    written before null counts existed has no ``nulls`` column; its
+    adds decode without the key ("unknown")."""
     import io
 
     import pyarrow.parquet as pq
@@ -1030,6 +1087,8 @@ def _decode_checkpoint_parquet(data: bytes) -> list[dict]:
             add["stats"] = json.loads(row["stats"])
         if row["bloom"] is not None:
             add["bloom"] = json.loads(row["bloom"])
+        if row.get("nulls") is not None:
+            add["nulls"] = json.loads(row["nulls"])
         adds.append(add)
     return adds
 
@@ -1067,9 +1126,13 @@ class TxTable:
         path/data/<uuid>.parquet        immutable data files
 
     Log entry: ``{"version": N, "mode": "append"|"overwrite",
-    "add": [{"file": name, "rows": n, "stats": {col: [min, max]}}],
-    "remove": [name, ...], "schema": <json>?, "txn": id?}``.
-    ``schema`` appears on the commit that establishes or evolves it.
+    "add": [{"file": name, "rows": n, "stats": {col: [min, max]},
+    "nulls": {col: count}}], "remove": [name, ...], "schema": <json>?,
+    "txn": id?}``. ``schema`` appears on the commit that establishes or
+    evolves it. ``stats`` and ``nulls`` (Delta's ``nullCount``) are keyed
+    by physical column name; an add without ``nulls`` (written before
+    null counts were recorded, or by the Python writer) means
+    "unknown", and readers that bound from the log then run a Spark job.
 
     Temp entries live under ``_log/_tmp/`` — OUTSIDE the ``*.json``
     namespace ``versions()`` lists — and ``versions()`` additionally
@@ -1178,7 +1241,7 @@ class TxTable:
 
     def _write_checkpoint_parquet(self, version: int, adds: list[dict]) -> None:
         """The columnar add-list sidecar: one row per add action, nested
-        stats/bloom JSON-encoded per row (they are opaque to columnar
+        stats/bloom/nulls JSON-encoded per row (they are opaque to columnar
         pruning anyway). Written driver-side via Arrow — the add list is
         driver state by construction — through the same create-if-absent
         claim as every other log artifact."""
@@ -1201,6 +1264,9 @@ class TxTable:
                 ],
                 "bloom": [
                     json.dumps(a["bloom"]) if "bloom" in a else None for a in adds
+                ],
+                "nulls": [
+                    json.dumps(a["nulls"]) if "nulls" in a else None for a in adds
                 ],
             }
         )
@@ -1644,7 +1710,7 @@ class TxTable:
         doc = self._log.checkpoint_doc(cp)
         if not doc.get("adds_parquet"):
             return None
-        entries = [self._log.read_entry(v) for v in vs if v > cp and v <= upto]
+        entries = [self._log.read_entry(v) for v in _tail(vs, cp, upto)]
         if any(e["mode"] == "overwrite" for e in entries):
             return None
         # schema resolves from the doc + tail (no add fold needed)
@@ -1676,7 +1742,7 @@ class TxTable:
         def cell(row, name):
             # Arrow → pandas surfaces parquet NULLs as None OR scalar NaN
             # depending on the column's landing dtype; normalize to None
-            v = row[name]
+            v = row.get(name)  # an older sidecar has no "nulls" column
             if v is None or (isinstance(v, float) and pd.isna(v)):
                 return None
             return v
@@ -1702,6 +1768,8 @@ class TxTable:
                         add["stats"] = json.loads(s)
                     if (bl := cell(row, "bloom")) is not None:
                         add["bloom"] = json.loads(bl)
+                    if (nl := cell(row, "nulls")) is not None:
+                        add["nulls"] = json.loads(nl)
                     add.update(stats_overlay.get(add["file"], {}))
                     if fname_dv := dv_overlay.get(add["file"]):
                         add["dv"] = sorted(set(add.get("dv", [])) | fname_dv)
@@ -1832,7 +1900,9 @@ class TxTable:
         read-back; swapping this for ranged footer reads changes no
         protocol). Conservative by construction: a column whose footer
         lacks min/max for a data-bearing row group is OMITTED from the
-        stats map, which :func:`file_matches` treats as "cannot skip"."""
+        stats map, which :func:`file_matches` treats as "cannot skip";
+        a column whose footer lacks a null count in any row group is
+        omitted from ``nulls`` ("unknown")."""
         import pyarrow.parquet as pq
 
         stat_cols = {
@@ -1851,17 +1921,25 @@ class TxTable:
                 continue  # zero-row stub; absence == empty, like the job path
             lo: dict = {}
             hi: dict = {}
+            nulls: dict = {}
             seen: set[str] = set()
             broken: set[str] = set()
+            uncounted: set[str] = set()
             for rg_i in range(md.num_row_groups):
                 rg = md.row_group(rg_i)
                 for ci in range(rg.num_columns):
                     col = rg.column(ci)
                     name = col.path_in_schema
-                    if name not in stat_cols or name in broken:
+                    if name not in stat_cols:
+                        continue
+                    st = col.statistics
+                    if st is not None and st.has_null_count:
+                        nulls[name] = nulls.get(name, 0) + st.null_count
+                    else:
+                        uncounted.add(name)
+                    if name in broken:
                         continue
                     seen.add(name)
-                    st = col.statistics
                     if st is not None and st.has_min_max:
                         v0, v1 = _normalize_footer_ts(st.min), _normalize_footer_ts(st.max)
                         lo[name] = v0 if name not in lo or v0 < lo[name] else lo[name]
@@ -1882,13 +1960,17 @@ class TxTable:
                     stats[c] = [_stat_value(lo[c]), _stat_value(hi[c])]
                 else:
                     stats[c] = [None, None]  # all-null column, exact
-            out[s.getPath().getName()] = {"rows": md.num_rows, "stats": stats}
+            out[s.getPath().getName()] = {
+                "rows": md.num_rows,
+                "stats": stats,
+                "nulls": {c: n for c, n in nulls.items() if c not in uncounted},
+            }
         return out
 
     def _file_stats(self, src: DataFrame, want_bloom: list[str]) -> dict[str, dict]:
         """Per-file skip-index metadata for every parquet file behind
-        ``src``: row count, min/max per eligible column, Bloom filters
-        for the requested eligible columns. ONE Spark job grouped by
+        ``src``: row count, min/max and null count per eligible column,
+        Bloom filters for the requested eligible columns. ONE Spark job grouped by
         ``input_file_name`` — O(files) driver rows, never a job per
         file. Shared by ingest (:meth:`_write_data`) and retrofit
         (:meth:`analyze`)."""
@@ -1911,6 +1993,7 @@ class TxTable:
         for c in stat_cols:
             aggs.append(F.min(c).alias(f"__min__{c}"))
             aggs.append(F.max(c).alias(f"__max__{c}"))
+            aggs.append(F.count(c).alias(f"__set__{c}"))
         for c in bloom_cols:
             for i in range(_BLOOM_K):
                 # mirrors _bloom_positions: md5("<i>:<value>")[:12] % m
@@ -1937,7 +2020,11 @@ class TxTable:
             for c in stat_cols:
                 lo, hi = _stat_value(d[f"__min__{c}"]), _stat_value(d[f"__max__{c}"])
                 stats[c] = [lo, hi]
-            entry: dict = {"rows": d["__rows"], "stats": stats}
+            entry: dict = {
+                "rows": d["__rows"],
+                "stats": stats,
+                "nulls": {c: d["__rows"] - d[f"__set__{c}"] for c in stat_cols},
+            }
             if bloom_cols:
                 entry["bloom"] = {}
                 for c in bloom_cols:
@@ -1955,8 +2042,9 @@ class TxTable:
 
     def analyze(self, bloom_cols: list[str] | None = None, max_retries: int = 5) -> int:
         """ANALYZE: retrofit skip-index metadata onto live files that
-        lack it — min/max stats for files written without them (e.g. by
-        an external writer) and Bloom filters for newly-requested
+        lack it — min/max stats and null counts for files written
+        without them (e.g. by an external writer, or before null counts
+        were recorded) and Bloom filters for newly-requested
         columns — as ONE metadata-only ``set_stats`` commit; returns the
         committed version (current version if nothing to do).
 
@@ -1986,6 +2074,7 @@ class TxTable:
             a
             for a in self.snapshot_adds(latest)
             if "stats" not in a
+            or "nulls" not in a
             or any(c not in (a.get("bloom") or {}) for c in eligible)
         ]
         if not todo:
@@ -2272,7 +2361,12 @@ class TxTable:
         if latest is None:
             raise FileNotFoundError(f"no committed data under {self.path}")
         upto = latest if to_version is None else to_version
-        df = self._read_units(plan_changes(self._log, from_version, upto), from_version)
+        return self._changes_frame(plan_changes(self._log, from_version, upto), from_version, upto)
+
+    def _changes_frame(self, units: list[ChangeUnit], from_version: int, upto: int) -> DataFrame:
+        """:meth:`changes` of the planned ``units`` of ``(from_version,
+        upto]``: their rows, or an empty frame of the feed's schema."""
+        df = self._read_units(units, from_version)
         if df is not None:
             return df
         schema = self.schema_at(upto)
@@ -2433,22 +2527,44 @@ class TxTable:
         :class:`CommitConflict` (snapshot-level write-write detection)
         instead of silently duplicating rows.
         """
+        return self._merge(
+            source, None, key, delete_matched, txn, update_set, matched_condition,
+            insert_unmatched, evolve_schema, distributed,
+        )
+
+    def _merge(
+        self,
+        source: DataFrame,
+        key_range: tuple | None,
+        key: list[str],
+        delete_matched: bool = False,
+        txn: str | None = None,
+        update_set: dict[str, str] | None = None,
+        matched_condition: str | None = None,
+        insert_unmatched: bool = True,
+        evolve_schema: bool = False,
+        distributed: bool = False,
+    ) -> int:
+        """The body of :meth:`merge`. ``key_range`` is ``(lo, hi)`` of
+        the source's leading key as stat values, bounds that contain
+        the source's (a caller that knows them from the log, such as
+        the replica drain, passes them); None computes them with one
+        Spark job, only when the table exists."""
         clause_path = (
             update_set is not None or matched_condition is not None or not insert_unmatched
         )
         latest = self.latest_version()
         base = latest if latest is not None else -1
-        k0 = key[0]
-        bounds = source.agg(
-            F.min(k0).alias("lo"), F.max(k0).alias("hi")
-        ).collect()[0]
-        scope = []
-        if bounds["lo"] is not None:
-            scope = [(k0, ">=", _stat_value(bounds["lo"])), (k0, "<=", _stat_value(bounds["hi"]))]
         if base >= 0:
+            k0 = key[0]
+            if key_range is None:
+                b = source.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).collect()[0]
+                key_range = _stat_value(b["lo"]), _stat_value(b["hi"])
+            lo, hi = key_range
+            scope = None if lo is None else [(k0, ">=", lo), (k0, "<=", hi)]
             # same planner switch as delete/update: Spark-pruned sidecar
             # scan when asked and applicable, driver fold otherwise
-            touched, _ = self._scoped_adds(scope or None, base, distributed)
+            touched, _ = self._scoped_adds(scope, base, distributed)
         else:
             touched = []
         if not touched and base < 0:
@@ -3255,7 +3371,8 @@ class TxTable:
         atomic remove+add commit (readers at older versions untouched).
 
         Each ``zorder_by`` column is mapped to a ``width_bucket`` rank
-        (bounds from ONE min/max aggregate — map-side after that, no
+        (bounds from the live adds' min/max stats, or ONE min/max
+        aggregate when a file lacks them — map-side after that, no
         per-column sort), ranks are bit-interleaved into a single
         z-value, and the table is range-partitioned and sorted by it.
         Interleaving gives every listed column locality in the SAME
@@ -3271,7 +3388,8 @@ class TxTable:
         """
         latest = self.latest_version()
         base = latest if latest is not None else -1
-        files = self.snapshot_files()
+        adds = self.snapshot_adds()
+        files = [a["file"] for a in adds]
         df = self.read()
         n_out = target_files or max(1, len(files))
         if zorder_by:
@@ -3279,13 +3397,10 @@ class TxTable:
             if ncols * bits_per_col > 63:
                 raise ValueError(f"{ncols} cols x {bits_per_col} bits exceeds 63-bit z-value")
             nbuckets = 1 << bits_per_col
-            bounds = df.agg(
-                *[F.min(c).alias(f"lo_{c}") for c in zorder_by],
-                *[F.max(c).alias(f"hi_{c}") for c in zorder_by],
-            ).collect()[0]
+            bounds = self._zorder_bounds(adds, zorder_by, df)
             z = F.lit(0).cast("long")
             for i, c in enumerate(zorder_by):
-                lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
+                lo, hi = bounds[c]
                 if lo is None or lo == hi:
                     continue  # constant/all-null column adds no bits
                 # width_bucket is 1-based and clamps out-of-range to 0 /
@@ -3314,6 +3429,31 @@ class TxTable:
         else:
             clustered = df.repartition(n_out)
         return self.commit(clustered, mode="append", remove=files, base_version=base, op="OPTIMIZE")
+
+    def _zorder_bounds(self, adds: list[dict], cols: list[str], df: DataFrame) -> dict:
+        """column → (min, max) for ``optimize``'s ``width_bucket`` ranks:
+        from the live adds' stats when every add has them for a numeric
+        column (bounds of whole files, DV'd rows included, contain the
+        live rows' — wider is still a valid bucketing), else from ONE
+        Spark aggregate over the columns the stats cannot answer."""
+        numeric = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                   T.FloatType, T.DoubleType)
+        types = {f.name: f.dataType for f in df.schema.fields}
+        pm = _phys_map(self.schema_at())
+        out: dict = {}
+        for c in cols:
+            p = pm.get(c, c)
+            if isinstance(types.get(c), numeric) and all(p in (a.get("stats") or {}) for a in adds):
+                vals = [a["stats"][p] for a in adds if a["stats"][p][0] is not None]
+                out[c] = (min(v[0] for v in vals), max(v[1] for v in vals)) if vals else (None, None)
+        rest = [c for c in cols if c not in out]
+        if rest:
+            b = df.agg(
+                *[F.min(c).alias(f"lo_{c}") for c in rest],
+                *[F.max(c).alias(f"hi_{c}") for c in rest],
+            ).collect()[0]
+            out.update({c: (b[f"lo_{c}"], b[f"hi_{c}"]) for c in rest})
+        return out
 
     def fsck(self, repair: bool = False) -> list[str]:
         """FSCK [REPAIR]: list the current snapshot's add-actions whose

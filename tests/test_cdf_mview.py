@@ -486,3 +486,56 @@ def test_mview_minmax_randomized_equivalence(spark, tmp_path):
                 src.commit(_df(spark, *rows))
         view.refresh()
         assert _mm_state(view) == _mm_recompute(src), f"diverged at step {step}"
+
+
+def test_mview_refresh_of_one_append_takes_bounds_from_the_log(spark, tmp_path):
+    """A sum/count refresh of one append scopes the view rewrite with
+    the change units' file stats, not a bounds aggregate over the
+    delta: 4 Spark jobs, against 7 with the aggregate."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    view = IncrementalAggView(
+        src, str(tmp_path / "mv"), keys=["k"], measures={"n": ("count",), "s": ("sum", "v")}
+    )
+    src.commit(spark.range(200).select((F.col("id") % 7).alias("k"), F.col("id").alias("v")))
+    view.refresh()
+    src.commit(spark.range(200, 300).select((F.col("id") % 7).alias("k"), F.col("id").alias("v")))
+    sc = spark.sparkContext
+    sc.setJobGroup("append-refresh", "refresh one append")
+    try:
+        view.refresh()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("append-refresh")) == 4
+    assert _view_state(view) == _recompute(src)
+
+
+def test_mview_null_group_keys_match_pandas_across_refreshes(spark, tmp_path):
+    """Null group keys reach the view through the log's null counts:
+    after every refresh the view equals a pandas group-by that keeps
+    the null group."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    view = IncrementalAggView(
+        src, str(tmp_path / "mv"), keys=["k"], measures={"n": ("count",), "s": ("sum", "v")}
+    )
+
+    def expect():
+        pdf = src.read().toPandas()
+        g = pdf.groupby("k", dropna=False).agg(n=("v", "size"), s=("v", "sum")).reset_index()
+        return {
+            (None if k != k else int(k),): (int(n), int(s))
+            for k, n, s in g.itertuples(index=False)
+        }
+
+    steps = [
+        lambda: src.commit(_df(spark, (1, 10), (2, 5))),
+        lambda: src.commit(_df(spark, (None, 7), (3, 1))),
+        lambda: src.commit(_df(spark, (None, 2))),
+        lambda: src.merge(_df(spark, (3, 9)), key=["k"]),
+        lambda: src.delete([("v", "=", 7)], dv=True),
+        lambda: src.commit(_df(spark, (2, 4))),
+    ]
+    for step in steps:
+        step()
+        view.refresh()
+        assert _view_state(view) == expect()
+    assert (None,) in _view_state(view)

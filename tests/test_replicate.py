@@ -123,14 +123,14 @@ def test_crash_between_phases_resumes_exactly_once(spark, tmp_path, monkeypatch)
     dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
     _pump(spark, src.path, dst_path, cp)
     src.merge(_kv(spark, 5, 25, mul=7), key=["k"])  # version 1: delete + insert
-    merge = TxTable.merge
+    merge = TxTable._merge
 
-    def crash(self, source, key, delete_matched=False, txn=None, **kw):
+    def crash(self, source, key_range, key, delete_matched=False, txn=None, **kw):
         if txn is not None and txn.endswith(":1:i"):
             raise RuntimeError("crash before the insert phase")
-        return merge(self, source, key, delete_matched=delete_matched, txn=txn, **kw)
+        return merge(self, source, key_range, key, delete_matched=delete_matched, txn=txn, **kw)
 
-    monkeypatch.setattr(TxTable, "merge", crash)
+    monkeypatch.setattr(TxTable, "_merge", crash)
     with pytest.raises(RuntimeError, match="crash before the insert phase"):
         _pump(spark, src.path, dst_path, cp)
     dst = TxTable(spark, dst_path)
@@ -279,3 +279,47 @@ def test_drain_of_rowless_source_creates_empty_replica(spark, tmp_path):
     src.commit(_kv(spark, 0, 5))
     _pump(spark, src.path, dst_path, cp)
     assert _rows(dst) == _rows(src)
+
+
+def test_drain_of_one_append_runs_one_job(spark, tmp_path):
+    """The drain of one append runs only the MERGE's write job: the
+    phase's rows and key range come from the source log's file stats,
+    so the empty-phase guard (``take(1)``) and MERGE's key-range
+    aggregate run no job (4 jobs before, 1 now)."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 50))
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    src.commit(_kv(spark, 50, 80))
+    sc = spark.sparkContext
+    sc.setJobGroup("append-drain", "replicate one append")
+    try:
+        _pump(spark, src.path, dst_path, cp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("append-drain")) == 1
+    assert _rows(TxTable(spark, dst_path)) == _rows(src)
+
+
+def test_new_replica_of_cleaned_source_starts_from_head(spark, tmp_path):
+    """A replica with no mark of a source whose early log is gone
+    (``clean_log``) starts from the source's head snapshot under
+    ``<app>:<head>:i``; a later source commit applies exactly once."""
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 10))
+    src.merge(_kv(spark, 5, 15, mul=3), key=["k"])
+    src.checkpoint(1)
+    src.clean_log(1)
+    dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    _pump(spark, src.path, dst_path, cp)
+    dst = TxTable(spark, dst_path)
+    assert _rows(dst) == _rows(src)
+    app = f"repl:{dst_path}"
+    assert sorted(dst.txn_versions()) == [f"{app}:1:i"]
+    src.commit(_kv(spark, 20, 25))
+    _pump(spark, src.path, dst_path, cp)
+    _pump(spark, src.path, dst_path, cp)
+    assert _rows(dst) == _rows(src)
+    want = [f"{app}:1:i", f"{app}:2:i"]
+    assert sorted(dst.txn_versions()) == want
+    assert sorted(dst._log.read_entry(v).get("txn") for v in dst.versions()) == want
