@@ -507,16 +507,17 @@ class Lake:
         source_path: str,
         target_path: str,
         key: list[str],
-        checkpoint: str,
-        **kwargs,
+        checkpoint: str | None = None,
+        txn_app: str | None = None,
     ):
         """CDC-replicate one transaction-logged table onto another by
-        primary key — change-feed tail + idempotent ordered MERGEs; see
-        :func:`novlake_spark.replicate.replicate`. ``checkpoint`` is used
-        only by a continuous mirror (``available_now=False``)."""
+        primary key — a synchronous change-feed drain applied as
+        idempotent ordered MERGEs; see
+        :func:`novlake_spark.replicate.replicate`. ``checkpoint`` is
+        ignored: the watermark lives in the target's log."""
         from novlake_spark.replicate import replicate
 
-        return replicate(self.spark, source_path, target_path, key, checkpoint, **kwargs)
+        return replicate(self.spark, source_path, target_path, key, txn_app=txn_app)
 
     def attach_tx(
         self,

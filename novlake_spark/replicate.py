@@ -3,32 +3,30 @@ tail the source's row-level change feed and apply it onto a target
 keyed by a primary key — the cross-region / dev-mirror / downstream-mart
 primitive (Delta calls the write half APPLY CHANGES INTO).
 
-Pipeline shape: source commits apply in version order, each as two
-MERGE phases, deletes then inserts — the feed's file-rewrite semantics
-(a MERGE surfaces as delete-of-old-rows + insert-of-new-rows in one
-version, so that order converges the target although the feed
-re-delivers a rewritten file's surviving rows). A scheduled run
-(``available_now``) is a synchronous drain: it plans the change units
-past the target's watermark from the source log and reads each phase
-with a native parquet scan — no streaming query, no checkpoint. The
-units' file stats in the log say whether a phase holds rows and bound
-its leading key for MERGE's file scoping, so a phase runs one Spark job,
-its write; a guard or bounds job runs only for files without those
-stats (an older log, the Python writer). A replica with no mark yet, of
-a source whose log no longer holds version 0, starts from the source's
-head snapshot under ``<app>:<head>:i``. A continuous mirror is a
-``readStream.format("txlog")`` change-feed query whose ``foreachBatch``
-applies the same phases.
+Pipeline shape: a call is a synchronous drain, run on a schedule. It
+plans the change units past the target's watermark from the source log
+and applies each source commit in version order as two MERGE phases,
+deletes then inserts — the feed's file-rewrite semantics (a MERGE
+surfaces as delete-of-old-rows + insert-of-new-rows in one version, so
+that order converges the target although the feed re-delivers a
+rewritten file's surviving rows). Each phase is read with a native
+parquet scan — no streaming query, no checkpoint. The units' file stats
+in the log say whether a phase holds rows and bound its leading key for
+MERGE's file scoping, so a phase runs one Spark job, its write; a guard
+or bounds job runs only for files without those stats (an older log).
+A replica with no mark yet, of a source whose log no longer holds
+version 0, starts from the source's head snapshot under
+``<app>:<head>:i``.
 
 Exactly-once: every phase commits under txn ``<app>:<version>:<d|i>``,
 so the target's own log is the watermark (:func:`source_marks` also
-reads the older ``<app>@<batchId>:<version>:<d|i>`` keys). A crash
-between phases resumes at the missing one, a landed phase is skipped
-before any Spark job runs, and a stream that lost its checkpoint
-replays as no-ops. A drain whose source head inserted nothing (a
-deletion-vector DELETE, a constraint, ANALYZE) ends with a row-free
-commit of ``<app>:<head>:i``, so the watermark reaches the head and
-a ``clean_log`` of the source up to it never strands the replica.
+reads the older ``<app>@<batchId>:<version>:<d|i>`` keys of targets a
+streaming mirror wrote). A crash between phases resumes at the missing
+one, and a landed phase is skipped before any Spark job runs. A drain
+whose source head inserted nothing (a deletion-vector DELETE, a
+constraint, ANALYZE) ends with a row-free commit of ``<app>:<head>:i``,
+so the watermark reaches the head and a ``clean_log`` of the source up
+to it never strands the replica.
 
 At 100 TB each phase is a stats-scoped MERGE over an O(changed files)
 feed: the lag floor is the schedule interval plus one MERGE, the
@@ -37,48 +35,11 @@ bandwidth floor the source's churn, never table size.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import SparkSession
 
 from novlake_spark.txlog import TxTable, plan_changes, source_marks, unit_bounds
 
 _META = ("_change_type", "_commit_version")
-
-
-def _apply_phases(t: TxTable, done: dict[int, set[str]], phases: dict, key: list[str], txn_app: str):
-    """MERGE each ``(version, phase)`` of ``phases`` not yet in ``done``
-    (the target's :func:`source_marks`) in version order, each version's
-    ``"d"`` before its ``"i"``, under txn ``<app>:<version>:<phase>``,
-    and record it in ``done``. ``phases`` maps the pair to a function
-    building ``(rows, key_range)``: non-empty rows and the ``(lo, hi)``
-    bounds of their leading key (None: MERGE computes them), or None
-    when the phase has no rows."""
-    for v, phase in sorted(phases):
-        if phase not in done.get(v, ()):
-            built = phases[v, phase]()
-            # a delete phase onto a target that does not exist has nothing to delete
-            if built is not None and (phase == "i" or t.latest_version() is not None):
-                rows, key_range = built
-                t._merge(rows, key_range, key, delete_matched=phase == "d",
-                         txn=f"{txn_app}:{v}:{phase}")
-            done.setdefault(v, set()).add(phase)
-
-
-def apply_changes(spark: SparkSession, target_path: str, batch_df, key: list[str], txn_app: str):
-    """Apply one micro-batch of change-feed rows onto ``target_path``.
-    Public so a user's own ``foreachBatch`` can compose it with other
-    work; :func:`replicate` is the turnkey wrapper."""
-    t = TxTable(spark, target_path)
-    # bounded collect: at most two rows per source commit in this batch
-    pairs = batch_df.select(*reversed(_META)).distinct().collect()
-    phases = {
-        (v, c[0]): lambda q=f"_commit_version = {v} AND _change_type = '{c}'": (
-            batch_df.where(q).drop(*_META), None
-        )
-        for v, c in pairs
-    }
-    _apply_phases(t, source_marks(t.txn_versions(), txn_app), phases, key, txn_app)
 
 
 def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[str], txn_app: str):
@@ -96,27 +57,28 @@ def _drain(spark: SparkSession, source_path: str, target_path: str, key: list[st
     if head is None:
         return
     if not done and src.versions()[:1] != [0]:
-        phases = {(head, "i"): lambda: (src.read(head), None)}
-    else:
-        units: dict[tuple[int, str], list] = {}
-        for u in plan_changes(src._log, start, head):
-            units.setdefault((u.version, u.change_type[0]), []).append(u)
-        schema = src.schema_at(head)
-
-        def rows(phase_units):
-            # units can yield no rows (all DV'd), and a MERGE with an empty
-            # source would scope ALL files and rewrite them: the log's row
-            # counts say so, and take(1) only where a file has none
-            has_rows, bounds = unit_bounds(phase_units, key[0], schema)
-            if has_rows is False:
-                return None
-            df = src._read_units(phase_units, start).drop(*_META)
-            if has_rows is None and not df.take(1):
-                return None
-            return df, None if bounds is None else bounds[:2]
-
-        phases = {p: partial(rows, us) for p, us in units.items()}
-    _apply_phases(t, done, phases, key, txn_app)
+        t._merge(src.read(head), None, key, txn=f"{txn_app}:{head}:i")
+        return
+    units: dict[tuple[int, str], list] = {}
+    for u in plan_changes(src._log, start, head):
+        units.setdefault((u.version, u.change_type[0]), []).append(u)
+    schema = src.schema_at(head)
+    for (v, phase), phase_units in sorted(units.items()):
+        if phase in done.get(v, ()):
+            continue
+        done.setdefault(v, set()).add(phase)
+        # units can yield no rows (all DV'd), and a MERGE with an empty
+        # source would scope ALL files and rewrite them: the log's row
+        # counts say so, and take(1) only where a file has none
+        has_rows, bounds = unit_bounds(phase_units, key[0], schema)
+        # a delete phase onto a target that does not exist has nothing to delete
+        if has_rows is False or phase == "d" and t.latest_version() is None:
+            continue
+        rows = src._read_units(phase_units, start).drop(*_META)
+        if has_rows is None and not rows.take(1):
+            continue
+        t._merge(rows, None if bounds is None else bounds[:2], key,
+                 delete_matched=phase == "d", txn=f"{txn_app}:{v}:{phase}")
     if "i" not in done.get(head, ()):
         _mark_applied(src, t, head, f"{txn_app}:{head}:i")
 
@@ -134,8 +96,8 @@ def _mark_applied(src: TxTable, t: TxTable, head: int, txn: str):
 
 
 class Drained:
-    """What ``replicate(available_now=True)`` returns: the StreamingQuery
-    calls a scheduled caller makes, for a drain that already finished."""
+    """What :func:`replicate` returns: a drain that already finished,
+    behind the StreamingQuery calls that callers of a mirror make."""
 
     isActive = False
     recentProgress = property(lambda self: [])
@@ -155,32 +117,15 @@ def replicate(
     source_path: str,
     target_path: str,
     key: list[str],
-    checkpoint: str,
+    checkpoint: str | None = None,
     txn_app: str | None = None,
-    available_now: bool = True,
 ):
-    """Replicate ``source_path`` onto ``target_path``. With
-    ``available_now`` it drains the current backlog synchronously and
-    returns a finished :class:`Drained` handle — call it on a schedule
-    for batch-incremental replication; a failed drain raises here, and
-    the next call resumes it exactly once. ``available_now=False`` starts
-    (or resumes, via ``checkpoint``) a continuously-running mirror and
-    returns its StreamingQuery; ``checkpoint`` is used only there."""
-    app = txn_app or f"repl:{target_path.rstrip('/')}"
-    if available_now:
-        _drain(spark, source_path, target_path, key, app)
-        return Drained()
-    from novlake_spark.sources.txlog_source import register_txlog_source
-
-    register_txlog_source(spark)
-    return (
-        spark.readStream.format("txlog")
-        .option("path", source_path)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream.foreachBatch(
-            lambda batch_df, _: apply_changes(spark, target_path, batch_df, key, app)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """Replicate ``source_path`` onto ``target_path``: drain the current
+    backlog synchronously and return a finished :class:`Drained` handle.
+    Call it on a schedule for batch-incremental replication; a failed
+    drain raises here, and the next call resumes it exactly once.
+    ``checkpoint`` is ignored — the watermark lives in the target's log
+    under ``txn_app`` (default ``repl:<target_path>``); it stays a
+    parameter so callers written for a streaming mirror keep working."""
+    _drain(spark, source_path, target_path, key, txn_app or f"repl:{target_path.rstrip('/')}")
+    return Drained()

@@ -30,12 +30,12 @@ by construction and arrive as Arrow batches.
 
 The write path completes the symmetry: ``df.write.format("txlog")``
 publishes one atomic log commit per save (executors land one parquet
-file per task with per-column min/max stats computed on the Arrow
-batches as they stream through; the driver's ``commit`` hook publishes
-the entry), and ``writeStream.format("txlog")`` is an exactly-once
-streaming sink when given ``txnAppId`` — each micro-batch commits under
-txn ``<appId>@<batchId>``, so Spark replaying a batch after a crash is
-a log-detected no-op.
+file per task with per-column min/max stats and null counts computed
+on the Arrow batches as they stream through; the driver's ``commit``
+hook publishes the entry), and ``writeStream.format("txlog")`` is an
+exactly-once streaming sink when given ``txnAppId`` — each micro-batch
+commits under txn ``<appId>@<batchId>``, so Spark replaying a batch
+after a crash is a log-detected no-op.
 
 Log access goes through the same :class:`~novlake_spark.txlog.LogReader`
 TxTable uses: this writer and TxTable publish with the same
@@ -378,6 +378,7 @@ class _TxFileCommit(WriterCommitMessage):
     stats: dict = field(default_factory=dict)
     bloom: dict = field(default_factory=dict)
     bytes: int = 0
+    nulls: dict = field(default_factory=dict)
 
 
 class _WriterCore:
@@ -385,9 +386,9 @@ class _WriterCore:
     parquet file per non-empty task under ``data/`` (invisible until a
     log entry references it — the same land-then-publish protocol as
     ``TxTable._write_data``) and return its add-action in the commit
-    message, with min/max stats computed per Arrow batch as it streams
-    through, so the driver's ``commit`` publishes ONE atomic log entry
-    and needs no second pass over the data."""
+    message, with min/max stats and null counts computed per Arrow
+    batch as it streams through, so the driver's ``commit`` publishes
+    ONE atomic log entry and needs no second pass over the data."""
 
     def __init__(self, schema: T.StructType, options: dict, mode: str):
         self._log = LogReader(options["path"])
@@ -424,6 +425,7 @@ class _WriterCore:
         rows = 0
         lo: dict = {}
         hi: dict = {}
+        nulls: dict = {}  # a column no batch carries stays out: "unknown"
         bloom_bits = {c: bytearray(_BLOOM_M >> 3) for c in self._bloom_cols}
         try:
             for batch in iterator:
@@ -438,6 +440,7 @@ class _WriterCore:
                     if c not in batch.schema.names:
                         continue
                     mm = pc.min_max(batch.column(c))
+                    nulls[c] = nulls.get(c, 0) + batch.column(c).null_count
                     bl, bh = mm["min"].as_py(), mm["max"].as_py()
                     if bl is not None:
                         lo[c] = bl if c not in lo or bl < lo[c] else lo[c]
@@ -469,7 +472,7 @@ class _WriterCore:
             }
             for c, bits in bloom_bits.items()
         }
-        return _TxFileCommit(name, rows, stats, bloom, size)
+        return _TxFileCommit(name, rows, stats, bloom, size, nulls)
 
     # -- driver side -----------------------------------------------------
     def _adds(self, messages) -> list[dict]:
@@ -477,7 +480,8 @@ class _WriterCore:
         for m in messages:
             if m is None or m.file is None:
                 continue
-            add = {"file": m.file, "rows": m.rows, "stats": m.stats, "bytes": m.bytes}
+            add = {"file": m.file, "rows": m.rows, "stats": m.stats, "nulls": m.nulls,
+                   "bytes": m.bytes}
             if m.bloom:
                 add["bloom"] = m.bloom
             out.append(add)

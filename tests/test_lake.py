@@ -1,5 +1,7 @@
 """Lake facade (§2.A) round-trips: write modes, partitioning, formats."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -276,3 +278,66 @@ def test_replace_prefix_recovers_from_crash_window(spark, tmp_path):
     lake._replace_prefix(staged, path)
     assert [r.x for r in spark.read.parquet(path).collect()] == [2]
     assert not os.path.exists(path + "_old")
+
+
+def _kv(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+
+
+def _sorted_rows(t):
+    return sorted(tuple(r) for r in t.read().collect())
+
+
+@pytest.mark.parametrize("dv", [False, True])
+def test_txtable_facade_matches_txtable(spark, tmp_path, dv):
+    """The Lake methods over a transaction-logged table give what the
+    TxTable methods give on a twin table with the same history: return
+    values, rows, and the ops recorded in the log."""
+    from novlake_spark.txlog import TxTable
+
+    lake = Lake(spark)
+    via_lake, twin = (TxTable(spark, str(tmp_path / n)) for n in ("lake", "twin"))
+    for t in (via_lake, twin):
+        t.commit(_kv(spark, 0, 10).coalesce(1))
+        t.commit(_kv(spark, 10, 20).coalesce(1))
+
+    def same(got, want):
+        assert got == want
+        assert _sorted_rows(via_lake) == _sorted_rows(twin)
+        ops = [[t._log.read_entry(v).get("op") for v in t.versions()] for t in (via_lake, twin)]
+        assert ops[0] == ops[1]
+
+    same(lake.delete_where(via_lake.path, [("k", "<", 3)], dv=dv),
+         twin.delete([("k", "<", 3)], dv=dv))
+    assert any("dv" in a for a in via_lake.snapshot_adds()) == dv
+    same(lake.update_where(via_lake.path, {"v": "v + 1"}, [("k", ">=", 15)]),
+         twin.update({"v": "v + 1"}, [("k", ">=", 15)]))
+    lake.attach_tx(via_lake.path, "facade_kv")
+    sql = "SELECT k, v FROM facade_kv ORDER BY k"
+    got = lake.query_pandas(sql)
+    assert got.equals(twin.read().orderBy("k").toPandas())
+    assert list(got.k) == list(range(3, 20)) and got.v.iloc[-1] == 191
+    same(lake.restore_table(via_lake.path, 1), twin.restore(1))
+    clone, twin_clone = (
+        lake.clone_table(via_lake.path, str(tmp_path / "lake_clone")),
+        twin.clone(str(tmp_path / "twin_clone")),
+    )
+    assert _sorted_rows(clone) == _sorted_rows(twin_clone) == _sorted_rows(twin)
+    assert clone.versions() == twin_clone.versions() == [0]
+    # shallow: the clone's adds reference the source's files, none copied
+    assert not os.path.exists(os.path.join(clone.path, "data"))
+
+
+def test_replicate_table_positional_checkpoint_is_ignored(spark, tmp_path):
+    """``replicate_table(src, dst, key, checkpoint)`` called positionally
+    drains at once and returns a finished handle; ``checkpoint`` is
+    never created."""
+    from novlake_spark.txlog import TxTable
+
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.commit(_kv(spark, 0, 10))
+    dst, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
+    q = Lake(spark).replicate_table(src.path, dst, ["k"], cp)
+    assert q.awaitTermination() is None and q.recentProgress == []
+    assert _sorted_rows(TxTable(spark, dst)) == _sorted_rows(src)
+    assert not os.path.exists(cp)

@@ -22,15 +22,22 @@ def _rows(spark, pairs):
     return spark.createDataFrame(pairs, "k long, v long").coalesce(1)
 
 
-def _py_append(t, pairs):
+def _py_append(t, pairs, counted=True):
     """Append through the Python data-source writer, which records
-    min/max stats but no null counts."""
+    min/max stats and null counts; ``counted=False`` drops the null
+    counts from its add-actions, as in a log written before it kept them."""
     w = _TxLogBatchWriter(t.schema_at(), {"path": t.path}, "append")
+    if not counted:
+        adds = w._adds
+        w._adds = lambda messages: [
+            {k: v for k, v in a.items() if k != "nulls"} for a in adds(messages)
+        ]
     batch = pa.RecordBatch.from_pydict(
         {"k": [k for k, _ in pairs], "v": [v for _, v in pairs]},
         schema=pa.schema([("k", pa.int64()), ("v", pa.int64())]),
     )
     w.commit([w.write(iter([batch]))])
+    return t.latest_version()
 
 
 def _jobs(spark, name, fn):
@@ -94,7 +101,7 @@ _ops = st.lists(
     st.tuples(
         st.sampled_from(
             ["append", "append_null", "overwrite", "merge", "delete_dv", "update",
-             "restore", "py_append"]
+             "restore", "py_append", "py_append_uncounted"]
         ),
         st.integers(0, 9),
     ),
@@ -114,7 +121,7 @@ def test_unit_bounds_cover_the_change_rows(spark, tmp_path_factory, ops, data):
     window's change units is sound: a known row answer equals whether
     the feed has a row, ``(lo, hi)`` contains every non-null key of the
     feed, ``nulls == 0`` means no feed key is null, and a window with a
-    file lacking null counts (the Python writer) answers "unknown"."""
+    file lacking null counts (an older log) answers "unknown"."""
     t = TxTable(spark, str(tmp_path_factory.mktemp("ub") / "t"))
     t.commit(_rows(spark, [(k, k) for k in range(4)]))
     for step, (op, x) in enumerate(ops, start=1):
@@ -133,7 +140,7 @@ def test_unit_bounds_cover_the_change_rows(spark, tmp_path_factory, ops, data):
         elif op == "restore":
             t.restore(x % (t.latest_version() + 1))
         else:
-            _py_append(t, [(x, step), (x + 5, step)])
+            _py_append(t, [(x, step), (x + 5, step)], counted=op == "py_append")
     latest = t.latest_version()
     a = data.draw(st.integers(-1, latest - 1), label="a")
     b = data.draw(st.integers(a + 1, latest), label="b")
@@ -223,9 +230,10 @@ def test_torn_listing_relists_instead_of_folding_a_partial_tail(spark, tmp_path)
 
 
 def test_python_writer_source_refreshes_and_replicates_by_the_fallback(spark, tmp_path):
-    """Files from the Python writer carry no null counts, so the view
-    refresh and the replica drain answer with their Spark job; both
-    still converge on the source."""
+    """Python-writer files without null counts (as in a log written
+    before the writer kept them) send the view refresh and the replica
+    drain to their Spark job; both still converge on the source. A
+    Python-writer file with null counts is bounded from the log."""
     from novlake_spark.mview import IncrementalAggView
     from novlake_spark.replicate import replicate
 
@@ -243,9 +251,17 @@ def test_python_writer_source_refreshes_and_replicates_by_the_fallback(spark, tm
         assert sorted(dst.read().collect()) == sorted(src.read().collect())
 
     tick()
-    _py_append(src, [(20, 1), (21, 5)])
+    _py_append(src, [(20, 1), (21, 5)], counted=False)
     assert unit_bounds(plan_changes(src._log, 0, 1), "k", src.schema_at())[1] is None
     tick()
-    _py_append(src, [(3, 9), (30, 9)])
+    _py_append(src, [(3, 9), (30, 9)], counted=False)
     src.merge(_rows(spark, [(3, 2), (31, 0)]), key=["k"])
+    tick()
+    v = _py_append(src, [(40, None), (41, 2)])
+    assert src._log.read_entry(v)["add"][0]["nulls"] == {"k": 0, "v": 1}
+    assert unit_bounds(plan_changes(src._log, v - 1, v), "k", src.schema_at()) == (
+        True, (40, 41, 0)
+    )
+    # the drain runs its write alone: no empty-phase guard, no bounds job
+    assert _jobs(spark, "py-drain", lambda: replicate(spark, src.path, dst.path, ["k"])) == 1
     tick()

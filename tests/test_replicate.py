@@ -1,12 +1,12 @@
-"""CDC replication (novlake_spark.replicate): change-feed tail applied
+"""CDC replication (novlake_spark.replicate): a change-feed drain applied
 as ordered idempotent MERGEs — target converges to the source snapshot
-through appends, updates (MERGE), and deletes, survives restarts, and
-never double-applies a replayed batch."""
+through appends, updates (MERGE), and deletes, survives restarts and
+crashes between phases, and never applies a source commit twice."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from novlake_spark.replicate import apply_changes, replicate
+from novlake_spark.replicate import replicate
 from novlake_spark.sources.txlog_source import TxLogDataSource
 from novlake_spark.txlog import TxTable
 
@@ -84,24 +84,6 @@ def test_replication_restart_is_incremental(spark, tmp_path):
     assert dst.versions() == before
 
 
-def test_replayed_batch_is_noop(spark, tmp_path):
-    """Re-applying the same (batch, version) change set — what happens
-    when foreachBatch re-executes after a sink-side crash — must not
-    duplicate or re-delete anything."""
-    src = TxTable(spark, str(tmp_path / "src"))
-    src.commit(_kv(spark, 0, 20))
-    src.delete([("k", "<", 3)])
-    dst_path = str(tmp_path / "dst")
-    changes = src.changes(-1)
-    apply_changes(spark, dst_path, changes, ["k"], "app")
-    dst = TxTable(spark, dst_path)
-    state = _rows(dst)
-    versions = dst.versions()
-    apply_changes(spark, dst_path, changes, ["k"], "app")  # replay
-    assert _rows(dst) == state
-    assert dst.versions() == versions
-
-
 def test_lake_facade(spark, tmp_path):
     from novlake_spark.lake import Lake
 
@@ -171,8 +153,8 @@ def test_switch_from_batch_keyed_stream(spark, tmp_path):
 
 
 def test_drain_handle_starts_no_query_and_idles_without_jobs(spark, tmp_path):
-    """``available_now`` returns a finished handle with no streaming
-    query left behind, and a drain with nothing new runs no Spark job."""
+    """``replicate`` returns a finished handle with no streaming query
+    left behind, and a drain with nothing new runs no Spark job."""
     src = TxTable(spark, str(tmp_path / "src"))
     src.commit(_kv(spark, 0, 10))
     dst_path, cp = str(tmp_path / "dst"), str(tmp_path / "cp")
@@ -188,27 +170,6 @@ def test_drain_handle_starts_no_query_and_idles_without_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("idle-drain") == []
     assert _rows(TxTable(spark, dst_path)) == _rows(src)
-
-
-def test_stream_mirror_keys_phases_by_version(spark, tmp_path):
-    """The continuously-running mirror commits under the drain's
-    ``<app>:<version>:<d|i>`` keys, so a drain after it finds nothing."""
-    src = TxTable(spark, str(tmp_path / "src"))
-    src.commit(_kv(spark, 0, 10).coalesce(1))
-    src.delete([("k", "<", 3)])  # rewrites the one file: delete + insert
-    dst = TxTable(spark, str(tmp_path / "dst"))
-    cp = str(tmp_path / "cp")
-    q = replicate(spark, src.path, dst.path, key=["k"], checkpoint=cp,
-                  txn_app="app", available_now=False)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert _rows(dst) == _rows(src)
-    assert sorted(dst.txn_versions()) == ["app:0:i", "app:1:d", "app:1:i"]
-    before = dst.versions()
-    replicate(spark, src.path, dst.path, key=["k"], checkpoint=cp, txn_app="app")
-    assert dst.versions() == before
 
 
 def test_drain_below_clean_log_horizon_raises(spark, tmp_path):
